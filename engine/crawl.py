@@ -89,15 +89,11 @@ class static_planning:
         # Distinguish "explicitly set on this session" from "inheriting the
         # default": restoring an inherited default as an explicit value
         # would pin it for the rest of the session even on deployments
-        # whose build default differs.  RuntimeConfig.isModifiable can't
-        # tell us; unset-then-probe can — SQL confs always resolve to
-        # their effective default once unset.
+        # whose build default differs.  get() with a None default returns
+        # None iff the key is unset on this session.  Both are recorded
+        # before the conf is touched, so a failing set() loses nothing.
         self.prev = self.spark.conf.get(self.KEY, None)
-        self.spark.conf.unset(self.KEY)
-        self.default = self.spark.conf.get(self.KEY)
-        self.was_explicit = (
-            self.prev is not None and self.prev != self.default
-        )
+        self.was_explicit = self.prev is not None
         self.spark.conf.set(self.KEY, "false")
         return self
 
@@ -136,7 +132,11 @@ def _global_seq_by_url(
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    counts = rp.groupBy("_pid").count().collect()
+    try:
+        counts = rp.groupBy("_pid").count().collect()
+    except BaseException:
+        rp.unpersist()
+        raise
     base: dict[int, int] = {}
     acc = offset
     for row in sorted(counts, key=lambda r: r["_pid"]):
@@ -234,16 +234,20 @@ def run_round(
     """Execute round ``rnd`` from snapshot ``rnd`` to snapshot ``rnd+1``.
 
     Returns the metrics dict that was committed with the snapshot.
-    ``seen_filter`` optionally wraps the anti-join probe side with a bloom
-    pre-filter (engine/filters.bloom_prune) — correctness-neutral.
+    ``seen_filter`` optionally wraps the anti-join probe side with a
+    store-backed seen filter (engine/filters.StoreBloomFilter /
+    StoreCuckooFilter) — correctness-neutral.
 
-    Spark-job budget per round (the scaling-efficiency lever — idle-core
-    gaps between jobs are what erode efficiency as cores grow): ONE
-    materialization job (the fetch_seq partition-counts collect, which
-    fills the ext/tagged caches), then the four table writes submitted in
-    PARALLEL with all round metrics observed on the writes themselves —
-    no separate aggregation, no per-round lineage count, no frontier
-    empty-check job (both ride the manifest).
+    Spark jobs per round (the scaling-efficiency lever — idle-core gaps
+    between jobs are what erode efficiency as cores grow): all round
+    metrics are observed on the table writes themselves — no separate
+    aggregation, no per-round lineage count, no frontier empty-check job
+    (both ride the manifest).  A round is still not one job:
+    ``perfbench/run.py --trace 1`` measures 14 jobs/round on budget_round
+    (15 on a one-round S crawl) — about 7 under the fetch_seq
+    partition-counts collect (which also fills the ext/tagged caches),
+    about 2 parquet schema/listing reads, and about 5 across the four
+    table writes submitted in PARALLEL, broadcast builds included.
     """
     frontier = store.read(spark, "frontier", rnd)
     seen = store.read(spark, "seen", rnd)
@@ -267,221 +271,205 @@ def run_round(
     # PERSISTED: the politeness path (allowed) and the seen delta (blocked)
     # both read it, so the anti-join + gate run once per round, not twice.
     tagged = robots_gate(cand, robots).persist()
-    blocked = tagged.filter(F.col("robots_blocked")).drop("robots_blocked")
-    allowed = tagged.filter(~F.col("robots_blocked")).drop("robots_blocked")
+    ext = rp_slim = None
+    try:
+        blocked = tagged.filter(F.col("robots_blocked")).drop("robots_blocked")
+        allowed = tagged.filter(~F.col("robots_blocked")).drop("robots_blocked")
 
-    # 3. politeness: per-host top-B under the pinned total order (op G1)
-    selected = select_top_b(
-        allowed, cfg.default_budget, cfg.budget_overrides, cfg.salt
-    )
-
-    # 4. fetch = left join pages index on url_hash (ops C4/C5).  The
-    # selected side is repartitioned to HashPartitioning(url_hash, P)
-    # FIRST, for two reasons: (a) it matches the persisted pages index's
-    # pinned partitioning, so the join needs no exchange on the html side;
-    # (b) the fetch batch is politeness-budget-sized (small in BYTES), and
-    # AQE's byte-based coalescing would otherwise shrink it to a few
-    # partitions and serialize the CPU-bound Arrow extraction downstream —
-    # UDF stages are CPU-sized, not byte-sized.
-    n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fetched = selected.repartition(n_par, "url_hash").join(
-        pages_idx.select("url_hash", "html_z"), "url_hash", "left"
-    )
-
-    # 5. Arrow-UDF extraction (ops F3/F4 fused — engine/pure.py
-    # extract_text_and_links): the COMPRESSED body crosses to Python once,
-    # is inflated and PARSED once per page, then dropped immediately
-    ext = (
-        fetched.withColumn("_eb", extract_both_z_udf("html_z", "url"))
-        .withColumn(
-            "status",
-            F.when(F.col("html_z").isNotNull(), F.lit("200")).otherwise(
-                F.lit("404")
-            ),
+        # 3. politeness: per-host top-B under the pinned total order (op G1)
+        selected = select_top_b(
+            allowed, cfg.default_budget, cfg.budget_overrides, cfg.salt
         )
-        .withColumn("partition_id", F.spark_partition_id())
-        .withColumn("text", F.col("_eb.text"))
-        .withColumn("links", F.col("_eb.links"))
-        .drop("html_z", "_eb")
-    )
-    ext = ext.persist()
 
-    # 6. lineage with dense fetch_seq = global rank by url.  NOT a
-    # single-partition Window.orderBy (that serializes the whole selected
-    # set through one task — an OOM at cluster-scale budgets): range-
-    # partition a SLIM (url, url_hash) projection, rank locally per
-    # partition, add per-partition base offsets (one P-row count job on the
-    # persisted slim frame — this is the round's single materialization
-    # job, which also fills the ext/tagged caches), then join fetch_seq
-    # back 1:1 on the url_hash partitioning ext already carries — the wide
-    # text/links columns never cross the range exchange.
-    seq, rp_slim = _global_seq_by_url(
-        ext.select("url", "url_hash"), fetch_seq_offset, n_par
-    )
-    lineage = (
-        ext.join(seq.repartition(n_par, "url_hash"), "url_hash")
-        .select(
-            F.lit(rnd).alias("round"),
-            "partition_id",
-            "host",
+        # 4. fetch = left join pages index on url_hash (ops C4/C5).  The
+        # selected side is repartitioned to HashPartitioning(url_hash, P)
+        # FIRST, for two reasons: (a) it matches the persisted pages index's
+        # pinned partitioning, so the join needs no exchange on the html side;
+        # (b) the fetch batch is politeness-budget-sized (small in BYTES), and
+        # AQE's byte-based coalescing would otherwise shrink it to a few
+        # partitions and serialize the CPU-bound Arrow extraction downstream —
+        # UDF stages are CPU-sized, not byte-sized.
+        n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        fetched = selected.repartition(n_par, "url_hash").join(
+            pages_idx.select("url_hash", "html_z"), "url_hash", "left"
+        )
+
+        # 5. Arrow-UDF extraction (ops F3/F4 fused — engine/pure.py
+        # extract_text_and_links): the COMPRESSED body crosses to Python once,
+        # is inflated and PARSED once per page, then dropped immediately
+        ext = (
+            fetched.withColumn("_eb", extract_both_z_udf("html_z", "url"))
+            .withColumn(
+                "status",
+                F.when(F.col("html_z").isNotNull(), F.lit("200")).otherwise(
+                    F.lit("404")
+                ),
+            )
+            .withColumn("partition_id", F.spark_partition_id())
+            .withColumn("text", F.col("_eb.text"))
+            .withColumn("links", F.col("_eb.links"))
+            .drop("html_z", "_eb")
+        )
+        ext = ext.persist()
+
+        # 6. lineage with dense fetch_seq = global rank by url.  NOT a
+        # single-partition Window.orderBy (that serializes the whole selected
+        # set through one task — an OOM at cluster-scale budgets): range-
+        # partition a SLIM (url, url_hash) projection, rank locally per
+        # partition, add per-partition base offsets (one P-row counts collect
+        # on the persisted slim frame — the round's only action before the
+        # writes, which also fills the ext/tagged caches), then join fetch_seq
+        # back 1:1 on the url_hash partitioning ext already carries — the wide
+        # text/links columns never cross the range exchange.
+        seq, rp_slim = _global_seq_by_url(
+            ext.select("url", "url_hash"), fetch_seq_offset, n_par
+        )
+        lineage = (
+            ext.join(seq.repartition(n_par, "url_hash"), "url_hash")
+            .select(
+                F.lit(rnd).alias("round"),
+                "partition_id",
+                "host",
+                "url_hash",
+                "url",
+                "status",
+                F.when(F.col("links").isNull(), 0)
+                .otherwise(F.size("links"))
+                .alias("n_links"),
+                F.when(F.col("text").isNull(), 0)
+                .otherwise(F.octet_length("text"))
+                .alias("text_bytes"),
+                "fetch_seq",
+            )
+        )
+        # round metrics observe the lineage WRITE — no separate agg job.
+        # (n_hosts is approx_count_distinct: observed metrics cannot contain
+        # distinct aggregates; it is a monitoring figure, never compared.)
+        obs = Observation()
+        lineage = lineage.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_selected"),
+            F.sum(F.when(F.col("status") == "200", 1).otherwise(0)).alias(
+                "n_200"
+            ),
+            F.sum("n_links").alias("n_links"),
+            F.sum("text_bytes").alias("text_bytes"),
+            F.approx_count_distinct("host").alias("n_hosts"),
+        )
+
+        # 7. advance state.  `removed` is selected ∪ robots-blocked — cheap
+        # projections over the ext/tagged caches.  The seen table is
+        # APPEND-only: this round commits just `seen_delta` (O(round), not
+        # O(crawl history)).
+        removed = ext.select("url_hash", "url").unionByName(
+            blocked.select("url_hash", "url")
+        )
+        seen_delta = removed.withColumn("fetched_round", F.lit(rnd)).select(
+            "url_hash", "url", "fetched_round"
+        )
+        seen_next = seen.unionByName(seen_delta)
+        # cumulative seen size rides the manifest (n_seen_end) so the adaptive
+        # filter engage rule (engine/filters.adaptive_seen_filter_factory) is
+        # an O(1) JSON read, never a seen-table count: chain from the
+        # previous manifest
+        n_seen_prev = store.manifest(rnd)["metrics"]["n_seen_end"]
+        sobs = Observation()
+        seen_delta_w = seen_delta.observe(
+            sobs, F.count(F.lit(1)).alias("n_seen_delta")
+        )
+
+        kids = (
+            ext.filter(F.col("status") == "200")
+            .select(
+                F.col("url").alias("src_url"),
+                F.greatest(F.lit(0), F.col("priority") - 1).alias("priority"),
+                (F.col("depth") + 1).alias("depth"),
+                F.explode("links").alias("url"),
+            )
+            # the canon+hash UDF runs MAP-SIDE on the exploded links: ext is
+            # already hash-spread across n_par partitions (step 4's repartition
+            # on url_hash), so per-partition link counts are balanced and no
+            # exchange is needed before the UDF — the exploded stream crosses
+            # exactly ONE shuffle (the url_hash exchange feeding the anti-join
+            # and frontier lattice merge below), not two.  (An earlier revision
+            # repartitioned by url here; that predates ext's even
+            # pre-partitioning and doubled the widest per-round shuffle.)
+            .withColumn("url_hash", hash64_udf("url"))
+        )
+        kids = with_host(kids).select(
             "url_hash",
             "url",
-            "status",
-            F.when(F.col("links").isNull(), 0)
-            .otherwise(F.size("links"))
-            .alias("n_links"),
-            F.when(F.col("text").isNull(), 0)
-            .otherwise(F.octet_length("text"))
-            .alias("text_bytes"),
-            "fetch_seq",
+            "host",
+            "priority",
+            "depth",
+            F.lit(rnd + 1).alias("discovered_round"),
+            "src_url",
         )
-    )
-    # round metrics observe the lineage WRITE — no separate agg job.
-    # (n_hosts is approx_count_distinct: observed metrics cannot contain
-    # distinct aggregates; it is a monitoring figure, never compared.)
-    obs = Observation()
-    lineage = lineage.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_selected"),
-        F.sum(F.when(F.col("status") == "200", 1).otherwise(0)).alias(
-            "n_200"
-        ),
-        F.sum("n_links").alias("n_links"),
-        F.sum("text_bytes").alias("text_bytes"),
-        F.approx_count_distinct("host").alias("n_hosts"),
-    )
+        kids = kids.join(seen_next.select("url_hash"), "url_hash", "left_anti")
 
-    # 7. advance state.  `removed` is selected ∪ robots-blocked — cheap
-    # projections over the ext/tagged caches.  The seen table is
-    # APPEND-only: this round commits just `seen_delta` (O(round), not
-    # O(crawl history)).
-    removed = ext.select("url_hash", "url").unionByName(
-        blocked.select("url_hash", "url")
-    )
-    seen_delta = removed.withColumn("fetched_round", F.lit(rnd)).select(
-        "url_hash", "url", "fetched_round"
-    )
-    seen_next = seen.unionByName(seen_delta)
-    # cumulative seen size rides the manifest (n_seen_end) so the adaptive
-    # filter engage rule (engine/filters.adaptive_seen_filter_factory) is
-    # an O(1) JSON read, never a seen-table count.  Chain from the
-    # previous manifest; stores written before the metric existed pay one
-    # count job, then the chain self-heals.
-    n_seen_prev = (store.manifest(rnd).get("metrics") or {}).get("n_seen_end")
-    if n_seen_prev is None:
-        n_seen_prev = seen.select("url_hash").count()
-    sobs = Observation()
-    seen_delta_w = seen_delta.observe(
-        sobs, F.count(F.lit(1)).alias("n_seen_delta")
-    )
-
-    kids = (
-        ext.filter(F.col("status") == "200")
-        .select(
-            F.col("url").alias("src_url"),
-            F.greatest(F.lit(0), F.col("priority") - 1).alias("priority"),
-            (F.col("depth") + 1).alias("depth"),
-            F.explode("links").alias("url"),
+        survivors = frontier.join(
+            removed.select("url_hash"), "url_hash", "left_anti"
         )
-        # the canon+hash UDF runs MAP-SIDE on the exploded links: ext is
-        # already hash-spread across n_par partitions (step 4's repartition
-        # on url_hash), so per-partition link counts are balanced and no
-        # exchange is needed before the UDF — the exploded stream crosses
-        # exactly ONE shuffle (the url_hash exchange feeding the anti-join
-        # and frontier lattice merge below), not two.  (An earlier revision
-        # repartitioned by url here; that predates ext's even
-        # pre-partitioning and doubled the widest per-round shuffle.)
-        .withColumn("url_hash", hash64_udf("url"))
-    )
-    kids = with_host(kids).select(
-        "url_hash",
-        "url",
-        "host",
-        "priority",
-        "depth",
-        F.lit(rnd + 1).alias("discovered_round"),
-        "src_url",
-    )
-    kids = kids.join(seen_next.select("url_hash"), "url_hash", "left_anti")
+        frontier_next = merge_frontier(survivors.unionByName(kids))
+        # the next round's empty-check rides this write as an observed metric
+        fobs = Observation()
+        frontier_next = frontier_next.observe(
+            fobs, F.count(F.lit(1)).alias("frontier_rows")
+        )
 
-    survivors = frontier.join(
-        removed.select("url_hash"), "url_hash", "left_anti"
-    )
-    frontier_next = merge_frontier(survivors.unionByName(kids))
-    # the next round's empty-check rides this write as an observed metric
-    fobs = Observation()
-    frontier_next = frontier_next.observe(
-        fobs, F.count(F.lit(1)).alias("frontier_rows")
-    )
+        # pages_out: the extracted-text artifact (byte-identity invariant,
+        # BASELINE.json:15 — compared verbatim against refspec texts)
+        pages_out = ext.filter(F.col("status") == "200").select(
+            F.lit(rnd).alias("round"), "url_hash", "url", "text"
+        )
 
-    # pages_out: the extracted-text artifact (byte-identity invariant,
-    # BASELINE.json:15 — compared verbatim against refspec texts)
-    pages_out = ext.filter(F.col("status") == "200").select(
-        F.lit(rnd).alias("round"), "url_hash", "url", "text"
-    )
+        # round metrics into the snapshot manifest (B:14 "lineage + metrics") —
+        # harvested from the write-side observations after the parallel table
+        # writes land, before the manifest rename.  fetch_seq_end carries the
+        # cumulative lineage row count forward so the next round's offset is a
+        # manifest read, never an O(crawl-history) lineage scan.
+        def _metrics() -> dict:
+            m = obs.get
+            n_selected = int(m["n_selected"] or 0)
+            return {
+                "round": rnd,
+                "n_selected": n_selected,
+                "n_200": int(m["n_200"] or 0),
+                "n_404": n_selected - int(m["n_200"] or 0),
+                "n_links": int(m["n_links"] or 0),
+                "text_bytes": int(m["text_bytes"] or 0),
+                "n_hosts": int(m["n_hosts"] or 0),
+                "frontier_rows": int(fobs.get["frontier_rows"] or 0),
+                "fetch_seq_end": fetch_seq_offset + n_selected,
+                "n_seen_end": n_seen_prev + int(sobs.get["n_seen_delta"] or 0),
+            }
 
-    # round metrics into the snapshot manifest (B:14 "lineage + metrics") —
-    # harvested from the write-side observations after the parallel table
-    # writes land, before the manifest rename.  fetch_seq_end carries the
-    # cumulative lineage row count forward so the next round's offset is a
-    # manifest read, never an O(crawl-history) lineage scan.
-    def _metrics() -> dict:
-        m = obs.get
-        n_selected = int(m["n_selected"] or 0)
-        return {
-            "round": rnd,
-            "n_selected": n_selected,
-            "n_200": int(m["n_200"] or 0),
-            "n_404": n_selected - int(m["n_200"] or 0),
-            "n_links": int(m["n_links"] or 0),
-            "text_bytes": int(m["text_bytes"] or 0),
-            "n_hosts": int(m["n_hosts"] or 0),
-            "frontier_rows": int(fobs.get["frontier_rows"] or 0),
-            "fetch_seq_end": fetch_seq_offset + n_selected,
-            "n_seen_end": n_seen_prev + int(sobs.get["n_seen_delta"] or 0),
-        }
-
-    # store-backed seen filters (engine/filters.StoreBloomFilter /
-    # StoreCuckooFilter) commit their per-round shard update with the
-    # snapshot — executor-side, no shard bytes through the driver
-    extra_tables = (
-        seen_filter.delta_tables(seen_delta, seen_next)
-        if seen_filter is not None and hasattr(seen_filter, "delta_tables")
-        else {}
-    )
-    metrics = store.commit_state(
-        rnd + 1,
-        {
-            "frontier": frontier_next,
-            "seen": seen_delta_w,
-            "lineage": lineage,
-            "pages_out": pages_out,
-            **extra_tables,
-        },
-        metrics_fn=_metrics,
-        parallel=True,
-    )
-    ext.unpersist()
-    tagged.unpersist()
-    rp_slim.unpersist()
-    return metrics
-
-
-def _fetch_seq_offset(spark: SparkSession, store: SnapStore, sid: int) -> int:
-    """Rows already in lineage at snapshot sid (0 if none).
-
-    The cumulative count is carried in each snapshot's manifest metrics
-    (``fetch_seq_end``), so per-round this is a JSON field read — O(1),
-    not an O(crawl-history) lineage scan.  Stores written before the
-    metric existed fall back to the authoritative count.
-    """
-    m = store.manifest(sid).get("metrics") or {}
-    if "fetch_seq_end" in m:
-        return int(m["fetch_seq_end"])
-    try:
-        return store.read(spark, "lineage", sid).count()
-    except FileNotFoundError:
-        return 0
+        # store-backed seen filters (engine/filters.StoreBloomFilter /
+        # StoreCuckooFilter) commit their per-round shard update with the
+        # snapshot — executor-side, no shard bytes through the driver
+        extra_tables = (
+            seen_filter.delta_tables(seen_delta, seen_next)
+            if seen_filter is not None
+            else {}
+        )
+        return store.commit_state(
+            rnd + 1,
+            {
+                "frontier": frontier_next,
+                "seen": seen_delta_w,
+                "lineage": lineage,
+                "pages_out": pages_out,
+                **extra_tables,
+            },
+            metrics_fn=_metrics,
+            parallel=True,
+        )
+    finally:
+        # released on every exit: a round that raises (a failed write, a
+        # killed commit) must not leak its caches into a long-lived session
+        for df in (tagged, ext, rp_slim):
+            if df is not None:
+                df.unpersist()
 
 
 def run_crawl(
@@ -521,16 +509,11 @@ def run_crawl(
                 rnd = sid  # next round number == current snapshot id
                 if rnd >= cfg.max_rounds:
                     break
-                # empty-check from the previous round's observed metric;
-                # count() fallback only for stores written before the
-                # metric existed
-                m_prev = store.manifest(sid).get("metrics") or {}
-                frontier_rows = m_prev.get("frontier_rows")
-                if frontier_rows is None:
-                    frontier_rows = (
-                        store.read(spark, "frontier", sid).limit(1).count()
-                    )
-                if frontier_rows == 0:
+                # empty-check and fetch_seq offset from the previous
+                # round's manifest metrics: O(1) JSON reads, never a
+                # frontier or lineage scan
+                m_prev = store.manifest(sid)["metrics"]
+                if m_prev["frontier_rows"] == 0:
                     break
                 seen_filter = (
                     seen_filter_factory(spark, store, sid)
@@ -544,7 +527,7 @@ def run_crawl(
                     pages_idx,
                     robots,
                     cfg,
-                    _fetch_seq_offset(spark, store, sid),
+                    m_prev["fetch_seq_end"],
                     seen_filter,
                 )
                 rounds_done += 1

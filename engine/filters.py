@@ -10,10 +10,12 @@ no false negatives, so skipping is sound).  The final seen set is therefore
 byte-identical to the exact plan (property- and equivalence-tested).
 
 Scale shape: one shard per url_hash bucket, each sized for n/P keys.  At a
-10^10 frontier with P=4096 buckets and fpp 1e-3, a shard is ~4.3 MB — it
-rides to executors as a task-closure broadcast and probes whole Arrow
-batches vectorized (mapInPandas), amortizing the load per partition, not
-per row.
+10^10 frontier with P=4096 buckets and fpp 1e-3, a bloom shard is ~4.3 MB.
+Shards live in the snapshot store (append-only ``bloomshards`` layers, the
+``cuckooshards`` replace table), are built and updated executor-side by
+grouped Arrow UDFs, and are probed by a cogroup on bucket =
+pmod(url_hash, P): each task sees only its own bucket's shard rows and
+probes whole batches vectorized.  No shard byte passes through the driver.
 
 Cuckoo shards add deletion (re-crawl eviction) with 4-slot buckets and
 16-bit fingerprints (partial-key cuckoo hashing, Fan et al. 2014 — public
@@ -23,7 +25,6 @@ algorithm; cf. PAPERS.md sliding-window cuckoo work for the motivation).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -68,31 +69,6 @@ def bloom_contains(bloom: bytes, n_bits: int, k: int, hashes: np.ndarray) -> np.
     idx = _indices(hashes.astype(np.uint64), n_bits, k)  # (k, n)
     present = (bits[(idx >> 3).astype(np.int64)] >> (idx & 7).astype(np.uint8)) & 1
     return present.all(axis=0).astype(bool)
-
-
-@dataclass
-class BloomShards:
-    """P bloom shards keyed by pmod(url_hash, P) — picklable, rides in the
-    task closure of the probe UDF."""
-
-    n_shards: int
-    shards: dict[int, tuple[bytes, int, int]]  # bucket -> (bits, n_bits, k)
-
-    def maybe_seen(self, url_hashes: np.ndarray) -> np.ndarray:
-        """True where the hash may be in the seen set (no false negatives:
-        an empty/missing shard means the bucket holds no seen keys →
-        False)."""
-        u = url_hashes.astype(np.int64).astype(np.uint64)
-        buckets = (url_hashes % self.n_shards + self.n_shards) % self.n_shards
-        out = np.zeros(len(url_hashes), dtype=bool)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            mask = buckets == b
-            bits, n_bits, k = shard
-            out[mask] = bloom_contains(bits, n_bits, k, u[mask])
-        return out
 
 
 def bloom_shards_df(
@@ -143,35 +119,16 @@ def bloom_shards_df(
     )
 
 
-def build_bloom_shards(
-    seen_df, n_shards: int = 32, fpp: float = 1e-3
-) -> "BloomShards":
-    """Collect the per-bucket shards into a picklable probe-side object.
+def _tag_by_bucket(df, shards_df, n_shards: int, col: str, member):
+    """Executor-side probe shared by both filters: cogroup the probe rows
+    with the shard rows on bucket = pmod(col, P) and add ``_maybe_seen``.
+    ``member(hashes, shard_rows)`` answers for one bucket's rows; a bucket
+    with no shard row holds no seen keys, so its rows come back False.
 
-    At 10^10 scale the shards would persist in the snapshot store and be
-    updated incrementally per round (union of new selected hashes);
-    rebuild-per-round is the test-scale path.
-    """
-    rows = bloom_shards_df(seen_df, n_shards, fpp).collect()
-    return BloomShards(
-        n_shards=n_shards,
-        shards={
-            r["bucket"]: (bytes(r["bloom"]), r["n_bits"], r["k"]) for r in rows
-        },
-    )
-
-
-def bloom_tag_store(df, shards_df, n_shards: int, col: str = "url_hash"):
-    """Executor-side bloom probe: cogroup the probe rows with the shard
-    LAYERS on bucket = pmod(url_hash, P).  A row is `_maybe_seen` iff ANY
-    layer of its bucket reports maybe-present (layers are per-round delta
-    blooms — union of layers ≡ bloom over the whole seen set, and bloom's
-    no-false-negatives property survives the union trivially).
-
-    No shard byte ever touches the driver: layers flow shuffle→task, each
-    task sees only its own bucket's layers.  The one exchange (probe side
-    on pmod(url_hash, P)) is url_hash-aligned — with frontier and shards
-    stored bucketed by url_hash it is a storage-partitioned no-op."""
+    No shard byte ever touches the driver: shard rows flow shuffle→task,
+    each task sees only its own bucket's rows.  The one exchange (probe
+    side on pmod(url_hash, P)) is url_hash-aligned — with frontier and
+    shards stored bucketed by url_hash it is a storage-partitioned no-op."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.types import BooleanType, StructField, StructType
@@ -184,26 +141,16 @@ def bloom_tag_store(df, shards_df, n_shards: int, col: str = "url_hash"):
         "_bucket", F.pmod(F.col(col), F.lit(n_shards)).cast("int")
     )
 
-    def probe(key, rows: pd.DataFrame, layers: pd.DataFrame) -> pd.DataFrame:
+    def probe(key, rows: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
         rows = rows.drop(columns=["_bucket"])
         if rows.empty:
             return pd.DataFrame({c: [] for c in [*cols, "_maybe_seen"]})
-        maybe = np.zeros(len(rows), dtype=bool)
-        if len(layers):
-            # a full (compaction) layer covers every key up to its gen —
-            # layers older than the newest full gen are redundant
-            if "full" in layers and layers["full"].any():
-                cutoff = layers.loc[layers["full"], "gen"].max()
-                layers = layers[layers["gen"] >= cutoff]
-            h = rows[col].to_numpy(dtype=np.int64).astype(np.uint64)
-            for lay in layers.itertuples(index=False):
-                maybe |= bloom_contains(
-                    bytes(lay.bloom), int(lay.n_bits), int(lay.k), h
-                )
-                if maybe.all():
-                    break
-        rows = rows.copy()
-        rows["_maybe_seen"] = maybe
+        h = rows[col].to_numpy(dtype=np.int64)
+        rows["_maybe_seen"] = (
+            member(h, shard_rows)
+            if len(shard_rows)
+            else np.zeros(len(h), dtype=bool)
+        )
         return rows
 
     return (
@@ -211,6 +158,32 @@ def bloom_tag_store(df, shards_df, n_shards: int, col: str = "url_hash"):
         .cogroup(shards_df.groupBy("bucket"))
         .applyInPandas(probe, out_schema)
     )
+
+
+def _bloom_member(h: np.ndarray, layers) -> np.ndarray:
+    """True where ANY layer reports maybe-present (layers are per-round
+    delta blooms — union of layers ≡ bloom over the whole seen set, and
+    bloom's no-false-negatives property survives the union trivially).  A
+    full (compaction) layer covers every key up to its gen, so layers older
+    than the newest full gen are skipped."""
+    if layers["full"].any():
+        cutoff = layers.loc[layers["full"], "gen"].max()
+        layers = layers[layers["gen"] >= cutoff]
+    u = h.astype(np.uint64)
+    maybe = np.zeros(len(h), dtype=bool)
+    for lay in layers.itertuples(index=False):
+        maybe |= bloom_contains(
+            bytes(lay.bloom), int(lay.n_bits), int(lay.k), u
+        )
+        if maybe.all():
+            break
+    return maybe
+
+
+def bloom_tag_store(df, shards_df, n_shards: int, col: str = "url_hash"):
+    """Bloom probe over the ``bloomshards`` layers: a row is `_maybe_seen`
+    iff any live layer of its bucket reports maybe-present."""
+    return _tag_by_bucket(df, shards_df, n_shards, col, _bloom_member)
 
 
 class StoreBloomFilter:
@@ -316,16 +289,14 @@ ADAPTIVE_BLOOM_ENGAGE_BYTES = 32 << 30
 # (~70 B avg on web corpora, prefix-dedup-hostile) + fetched_round int +
 # per-row parquet/arrow overhead
 SEEN_ROW_BYTES = 96
-# retained row-count form of the same threshold (back-compat; equal to
-# ADAPTIVE_BLOOM_ENGAGE_BYTES / SEEN_ROW_BYTES rounded to a decade)
-ADAPTIVE_BLOOM_ENGAGE_ROWS = ADAPTIVE_BLOOM_ENGAGE_BYTES // SEEN_ROW_BYTES
+# the gate in rows: the seen-row count whose estimated bytes first reach
+# ADAPTIVE_BLOOM_ENGAGE_BYTES (ceil)
+ADAPTIVE_BLOOM_ENGAGE_ROWS = -(-ADAPTIVE_BLOOM_ENGAGE_BYTES // SEEN_ROW_BYTES)
 
 
 def adaptive_seen_filter_factory(
-    engage_rows: int | None = None,
+    engage_rows: int = ADAPTIVE_BLOOM_ENGAGE_ROWS,
     inner_factory=None,
-    engage_bytes: int = ADAPTIVE_BLOOM_ENGAGE_BYTES,
-    row_bytes: int = SEEN_ROW_BYTES,
     **bloom_kw,
 ):
     """seen_filter_factory that engages the store-backed bloom pass only
@@ -337,58 +308,23 @@ def adaptive_seen_filter_factory(
     one-time full-bloom backfill on the engage round and per-round deltas
     after.
 
-    The gate is BYTES-based: ``n_seen_end × row_bytes ≥ engage_bytes``.
-    Rows alone mis-price the 10^10-frontier/10^8-seen regime — the probe
-    pass scans every frontier candidate (cost ∝ frontier) to prune an
-    anti-join whose build side still fits in memory (savings ∝ seen), so
-    engagement keys on when seen state stops fitting, which the manifest's
-    ``n_seen_end`` metric × a conservative row width approximates in one
-    O(1) JSON read.  ``engage_rows`` (row-count form) is retained for
-    tests/callers that reason in rows; when given it overrides the bytes
-    gate.  Stores written before the metric pay one count job (the chain
-    then self-heals via run_round).  The seen set is append-only, so the
-    decision is monotone: once engaged, always engaged."""
+    The gate is ``n_seen_end ≥ engage_rows``, one O(1) manifest read.  Its
+    default is the BYTES threshold above in rows: rows alone mis-price the
+    10^10-frontier/10^8-seen regime — the probe pass scans every frontier
+    candidate (cost ∝ frontier) to prune an anti-join whose build side
+    still fits in memory (savings ∝ seen), so engagement keys on when seen
+    state stops fitting.  ``inner_factory`` replaces the bloom factory
+    (tests pass a fake).  The seen set is append-only, so the decision is
+    monotone: once engaged, always engaged."""
 
     inner = inner_factory or bloom_seen_filter_factory(**bloom_kw)
-    thresh_rows = (
-        int(engage_rows)
-        if engage_rows is not None
-        else -(-engage_bytes // row_bytes)  # ceil
-    )
 
     def factory(spark, store, sid):
-        m = store.manifest(sid).get("metrics") or {}
-        n_seen = m.get("n_seen_end")
-        if n_seen is None:
-            try:
-                n_seen = store.read(spark, "seen", sid).count()
-            except FileNotFoundError:
-                n_seen = 0
-        if int(n_seen) < thresh_rows:
+        if store.manifest(sid)["metrics"]["n_seen_end"] < engage_rows:
             return None
         return inner(spark, store, sid)
 
     return factory
-
-
-def bloom_tag(df, shards: BloomShards, col: str = "url_hash"):
-    """Add `_maybe_seen`: True → must go through the exact anti-join;
-    False → provably unseen, may skip it.  mapInPandas so the shard dict
-    loads once per partition, probes whole batches."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("_maybe_seen", BooleanType(), False)]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            h = pdf[col].to_numpy(dtype=np.int64)
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = shards.maybe_seen(h)
-            yield pdf
-
-    return df.mapInPandas(probe, out_schema)
 
 
 # ---------------------------------------------------------------- cuckoo
@@ -526,81 +462,14 @@ class CuckooShard:
         return obj
 
 
-@dataclass
-class CuckooShards:
-    """P cuckoo shards keyed by pmod(url_hash, P) — the deletable
-    counterpart of BloomShards (same prune-never-decide contract: a
-    successfully-inserted key can never read as absent, so 'definitely
-    unseen' is sound; re-crawl eviction uses CuckooShard.delete)."""
-
-    n_shards: int
-    shards: dict[int, "CuckooShard"]
-
-    def maybe_seen(self, url_hashes: np.ndarray) -> np.ndarray:
-        buckets = (url_hashes % self.n_shards + self.n_shards) % self.n_shards
-        out = np.zeros(len(url_hashes), dtype=bool)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            mask = buckets == b
-            out[mask] = shard.contains_batch(url_hashes[mask])
-        return out
-
-
-def _cuckoo_build(keys: np.ndarray) -> CuckooShard:
-    """Build one shard; on insert refusal (over-load), rebuild 2x bigger —
-    the fallback path SURVEY.md §7.3 risk 4 demands."""
-    n = max(len(keys), 1)
-    while True:
-        shard = CuckooShard(n)
-        if all(shard.insert(int(k)) for k in keys.astype(np.uint64)):
-            return shard
-        n *= 2
-
-
-def build_cuckoo_shards(seen_df, n_shards: int = 32) -> CuckooShards:
-    """One cuckoo shard per bucket via a grouped Arrow UDF; only the
-    finished shard bytes (uint16 tables) leave the executors."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-        shard = _cuckoo_build(keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "table": [shard.to_bytes()],
-                "n_buckets": [shard.n_buckets],
-            }
-        )
-
-    rows = (
-        seen_df.select(
-            "url_hash", F.pmod("url_hash", F.lit(n_shards)).alias("bucket")
-        )
-        .groupBy("bucket")
-        .applyInPandas(_build, "bucket int, table binary, n_buckets long")
-        .collect()
-    )
-    return CuckooShards(
-        n_shards=n_shards,
-        shards={
-            r["bucket"]: CuckooShard.from_bytes(
-                bytes(r["table"]), int(r["n_buckets"])
-            )
-            for r in rows
-        },
-    )
-
-
 _CK_SHARD_SCHEMA = "bucket int, table binary, n_buckets long, saturated boolean"
 
 
 def _cuckoo_build_headroom(keys: np.ndarray) -> CuckooShard:
     """First-time bucket build with 4x capacity headroom so later per-round
-    delta inserts usually land without a rebuild."""
+    delta inserts usually land without a rebuild; on insert refusal
+    (over-load) it rebuilds 2x bigger — the fallback path SURVEY.md §7.3
+    risk 4 demands."""
     n = max(len(keys) * 4, 64)
     while True:
         shard = CuckooShard(n)
@@ -661,48 +530,19 @@ def cuckoo_shards_update_df(old_df, delta_keys, n_shards: int):
     )
 
 
+def _cuckoo_member(h: np.ndarray, shard_rows) -> np.ndarray:
+    row = shard_rows.iloc[0]
+    if bool(row["saturated"]):
+        return np.ones(len(h), dtype=bool)
+    shard = CuckooShard.from_bytes(bytes(row["table"]), int(row["n_buckets"]))
+    return shard.contains_batch(h)
+
+
 def cuckoo_tag_store(df, shards_df, n_shards: int, col: str = "url_hash"):
-    """Executor-side cuckoo probe — the deletable twin of bloom_tag_store
-    (same cogroup-on-bucket topology, no driver involvement).  Saturated
-    buckets degrade to all-maybe-seen, never to a false negative."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("_maybe_seen", BooleanType(), False)]
-    )
-    cols = df.columns
-    fr = df.withColumn(
-        "_bucket", F.pmod(F.col(col), F.lit(n_shards)).cast("int")
-    )
-
-    def probe(key, rows: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
-        rows = rows.drop(columns=["_bucket"])
-        if rows.empty:
-            return pd.DataFrame({c: [] for c in [*cols, "_maybe_seen"]})
-        if len(shard_rows):
-            row = shard_rows.iloc[0]
-            if bool(row["saturated"]):
-                maybe = np.ones(len(rows), dtype=bool)
-            else:
-                shard = CuckooShard.from_bytes(
-                    bytes(row["table"]), int(row["n_buckets"])
-                )
-                maybe = shard.contains_batch(
-                    rows[col].to_numpy(dtype=np.int64)
-                )
-        else:
-            maybe = np.zeros(len(rows), dtype=bool)
-        rows = rows.copy()
-        rows["_maybe_seen"] = maybe
-        return rows
-
-    return (
-        fr.groupBy("_bucket")
-        .cogroup(shards_df.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
+    """Cuckoo probe over the ``cuckooshards`` table — the deletable twin of
+    bloom_tag_store.  Saturated buckets degrade to all-maybe-seen, never to
+    a false negative."""
+    return _tag_by_bucket(df, shards_df, n_shards, col, _cuckoo_member)
 
 
 class StoreCuckooFilter:
@@ -744,19 +584,3 @@ def cuckoo_seen_filter_factory(n_shards: int = 32):
 
     return factory
 
-
-def cuckoo_tag(df, shards: CuckooShards, col: str = "url_hash"):
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("_maybe_seen", BooleanType(), False)]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            h = pdf[col].to_numpy(dtype=np.int64)
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = shards.maybe_seen(h)
-            yield pdf
-
-    return df.mapInPandas(probe, out_schema)

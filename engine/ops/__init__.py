@@ -113,8 +113,9 @@ _FRONT = (
     "snapshot_overwrite",
     "time_travel_read",
     # -- position 51+: rows-only flagship (refspec-pytest-verified; its
-    #    ordering/seen-set claims are hash-attested via crawl_fetch_log +
-    #    crawl_lineage_agg above) — deliberately past the 50-cut
+    #    ordering claims are hash-attested via crawl_fetch_log above, and
+    #    crawl_lineage_agg, which is not in this window, carries its
+    #    hash-green row on the r3/r4 record) — deliberately past the 50-cut
     "crawl_round",
 )
 

@@ -9,12 +9,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from engine.filters import (
-    CuckooShard,
-    bloom_shards_df,
-    bloom_tag,
-    build_bloom_shards,
-)
+from engine.filters import CuckooShard, bloom_shards_df, bloom_tag_store
 from engine.io import load_table
 from engine.ops import op
 from engine.ops.goldens import golden_oracle as _golden
@@ -48,7 +43,7 @@ def bloom_prune_op(spark, sf):
     seen = load_table(spark, sf, "orders").select(
         F.col("o_orderkey").alias("url_hash")
     )
-    shards = build_bloom_shards(seen, n_shards=32)
+    shards = bloom_shards_df(seen, n_shards=32)
     li = load_table(spark, sf, "lineitem")
     probe = li.select(
         F.col("l_orderkey").alias("url_hash"), F.lit("present").alias("probe_kind")
@@ -58,7 +53,7 @@ def bloom_prune_op(spark, sf):
             F.lit("absent").alias("probe_kind"),
         )
     )
-    tagged = bloom_tag(probe, shards)
+    tagged = bloom_tag_store(probe, shards, n_shards=32)
     return tagged.groupBy("probe_kind", "_maybe_seen").agg(
         F.count("*").alias("cnt")
     )
@@ -79,11 +74,11 @@ def seen_exact_verify(spark, sf):
         .filter(F.col("o_totalprice") > 100000)
         .select(F.col("o_orderkey").alias("url_hash"))
     )
-    shards = build_bloom_shards(seen, n_shards=32)
+    shards = bloom_shards_df(seen, n_shards=32)
     probe = load_table(spark, sf, "lineitem").select(
         F.col("l_orderkey").alias("url_hash"), "l_linenumber"
     )
-    tagged = bloom_tag(probe, shards)
+    tagged = bloom_tag_store(probe, shards, n_shards=32)
     maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     survivors = maybe.join(seen, "url_hash", "left_anti").unionByName(definite)

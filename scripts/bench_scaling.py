@@ -42,6 +42,7 @@ import json
 import os
 import re
 import shutil
+import statistics
 import subprocess
 import sys
 import time
@@ -1115,15 +1116,10 @@ def orchestrate(args) -> int:
             (rl["sec"] / rh["sec"]) / (hi / lo)
             for rl, rh in zip(runs[lo][s]["rounds"], runs[hi][s]["rounds"])
         ]
-        pair_med_round_effs.append(
-            round(sorted(per_round)[len(per_round) // 2], 3)
-        )
+        pair_med_round_effs.append(round(statistics.median(per_round), 3))
 
-    def _median(xs: list[float]) -> float:
-        return sorted(xs)[len(xs) // 2]
-
-    eff = _median(pair_effs)
-    med_eff = _median(pair_med_round_effs)
+    eff = statistics.median(pair_effs)
+    med_eff = statistics.median(pair_med_round_effs)
     # representative sample per level (median by round_sec_total) keeps the
     # single-sample artifact shape for the results table / md writer
     results = {
@@ -1140,8 +1136,11 @@ def orchestrate(args) -> int:
         for e, ps in zip(pair_med_round_effs, pair_subs)
         if ps["parse"]["eff"]
     ]
-    # representative substrate = the pair whose engine totals eff is median
-    rep_pair = pair_effs.index(_median(pair_effs))
+    # representative substrate = the pair whose engine totals eff is
+    # nearest the (interpolated) median
+    rep_pair = min(
+        range(len(pair_effs)), key=lambda i: abs(pair_effs[i] - eff)
+    )
     sub = pair_subs[rep_pair]
     parse_eff = sub["parse"]["eff"]
     report = {
@@ -1186,7 +1185,9 @@ def orchestrate(args) -> int:
         "substrate": sub,
         "substrate_per_pair": pair_subs,
         "pairwise_engine_vs_substrate": pair_evs,
-        "engine_vs_substrate": _median(pair_evs) if pair_evs else None,
+        "engine_vs_substrate": (
+            round(statistics.median(pair_evs), 3) if pair_evs else None
+        ),
         "unit": f"eff_{lo}to{hi}",
         "throughput_urls_per_sec": {str(c): round(thr[c], 1) for c in levels},
         "per_core_urls_per_sec": {

@@ -10,7 +10,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engine.filters import (
-    BloomShards,
     CuckooShard,
     bloom_build,
     bloom_contains,
@@ -50,20 +49,66 @@ def test_bloom_fpp_bounded():
     assert fp < 5e-3, fp  # 5× slack over the 1e-3 design point
 
 
-def test_bloom_shards_no_false_negatives_across_buckets():
-    hashes = (np.arange(5000, dtype=np.int64) - 2500) * 7919
-    shards = {}
+def _tags(spark, tag_fn, hashes, shards_df, n_shards):
+    """url_hash -> _maybe_seen for ``hashes`` probed through a store-path
+    tagger (bloom_tag_store / cuckoo_tag_store)."""
+    probe = spark.createDataFrame(
+        [(int(h),) for h in hashes], "url_hash long"
+    )
+    rows = tag_fn(probe, shards_df, n_shards).collect()
+    assert len(rows) == len(hashes)
+    return {r["url_hash"]: r["_maybe_seen"] for r in rows}
+
+
+def test_bloom_shards_no_false_negatives_across_buckets(spark):
+    from engine.filters import bloom_shards_df, bloom_tag_store
+
     n_shards = 16
-    buckets = (hashes % n_shards + n_shards) % n_shards
-    for b in range(n_shards):
-        sub = hashes[buckets == b].astype(np.uint64)
-        n_bits, k = bloom_params(len(sub))
-        shards[b] = (bloom_build(sub, n_bits, k), n_bits, k)
-    bs = BloomShards(n_shards=n_shards, shards=shards)
-    assert bs.maybe_seen(hashes).all()
-    # empty-shard path: hashes of a bucket with no members → all False
-    bs2 = BloomShards(n_shards=n_shards, shards={})
-    assert not bs2.maybe_seen(hashes).any()
+    hashes = (np.arange(5000, dtype=np.int64) - 2500) * 7919
+    buckets = hashes % n_shards  # floor mod == Spark's pmod
+    # members only in buckets 0-7: buckets 8-15 get no shard row
+    members = hashes[buckets < 8]
+    seen = spark.createDataFrame(
+        [(int(h),) for h in members], "url_hash long"
+    )
+    shards = bloom_shards_df(seen, n_shards=n_shards)
+    got = _tags(spark, bloom_tag_store, hashes, shards, n_shards)
+    assert all(got[int(h)] for h in members)
+    # empty-shard path: hashes of a bucket with no shard row → all False
+    assert not any(got[int(h)] for h in hashes[buckets >= 8])
+
+
+def test_cuckoo_saturated_bucket_is_all_maybe_seen(spark):
+    """A bucket whose shard flipped to ``saturated`` (headroom exhausted)
+    must tag EVERY probe row maybe-seen — including keys it never held —
+    while unsaturated buckets answer exactly as before."""
+    from pyspark.sql import functions as F
+
+    from engine.filters import (
+        _CK_SHARD_SCHEMA,
+        cuckoo_shards_update_df,
+        cuckoo_tag_store,
+    )
+
+    n_shards = 8
+    members = np.arange(400, dtype=np.int64) * 7919
+    absent = members + 1_000_000_007
+    seen = spark.createDataFrame(
+        [(int(h),) for h in members], "url_hash long"
+    )
+    empty = spark.createDataFrame([], _CK_SHARD_SCHEMA)
+    shards = cuckoo_shards_update_df(empty, seen, n_shards)
+    saturated = shards.withColumn("saturated", F.col("bucket") == 3)
+
+    probes = np.concatenate([members, absent])
+    base = _tags(spark, cuckoo_tag_store, probes, shards, n_shards)
+    got = _tags(spark, cuckoo_tag_store, probes, saturated, n_shards)
+    assert all(base[int(h)] for h in members)
+    in3 = [int(h) for h in probes if h % n_shards == 3]
+    assert all(got[h] for h in in3)
+    assert not all(base[h] for h in in3)  # the flag is what set them
+    others = {h: v for h, v in base.items() if h % n_shards != 3}
+    assert {h: got[h] for h in others} == others
 
 
 @given(_keys)
@@ -80,13 +125,13 @@ def test_cuckoo_insert_contains(keys):
     if landed:
         assert shard.contains_batch(np.asarray(landed, dtype=np.int64)).all()
     # Engine-path contract: the production builder resizes on refusal
-    # (engine/filters.py _cuckoo_build, SURVEY.md §7.3 risk 4), so ALL
-    # keys always land and read back.
+    # (engine/filters.py _cuckoo_build_headroom, SURVEY.md §7.3 risk 4),
+    # so ALL keys always land and read back.
     if keys:
-        from engine.filters import _cuckoo_build
+        from engine.filters import _cuckoo_build_headroom
 
         arr = np.asarray(keys, dtype=np.int64)
-        built = _cuckoo_build(arr)
+        built = _cuckoo_build_headroom(arr)
         assert built.contains_batch(arr).all()
 
 
@@ -288,12 +333,14 @@ def test_adaptive_engage_gate_is_bytes_based():
     """Round-4 L-stress refinement (SURVEY.md §6): the default engage
     threshold keys on seen-set BYTES vs executor memory (probe cost is
     O(frontier), savings are O(seen) — rows alone mis-price a
-    10^10-frontier/10^8-seen crawl).  The bytes gate must resolve to
-    ceil(engage_bytes / row_bytes) rows, an explicit engage_rows must
-    override it, and the default must sit well above the measured
-    tax regimes (M: 5×10^5 seen, L: 5×10^5 seen / 10^7 frontier)."""
+    10^10-frontier/10^8-seen crawl).  The default gate must resolve to
+    ceil(ADAPTIVE_BLOOM_ENGAGE_BYTES / SEEN_ROW_BYTES) rows, an explicit
+    engage_rows must override it, and the default must sit well above the
+    measured tax regimes (M: 5×10^5 seen, L: 5×10^5 seen / 10^7
+    frontier)."""
     from engine.filters import (
         ADAPTIVE_BLOOM_ENGAGE_BYTES,
+        ADAPTIVE_BLOOM_ENGAGE_ROWS,
         SEEN_ROW_BYTES,
         adaptive_seen_filter_factory,
     )
@@ -314,13 +361,12 @@ def test_adaptive_engage_gate_is_bytes_based():
         return f(None, _Store(n), 0)
 
     default_rows = -(-ADAPTIVE_BLOOM_ENGAGE_BYTES // SEEN_ROW_BYTES)
+    assert ADAPTIVE_BLOOM_ENGAGE_ROWS == default_rows
     assert probe(default_rows - 1) is None
     assert probe(default_rows) is sentinel
-    # bytes parameterization: 1 MiB at 64 B/row engages at 16384 rows
-    assert probe(16383, engage_bytes=1 << 20, row_bytes=64) is None
-    assert probe(16384, engage_bytes=1 << 20, row_bytes=64) is sentinel
-    # explicit rows override wins over the bytes gate
-    assert probe(10, engage_rows=10, engage_bytes=1 << 40) is sentinel
+    # explicit rows override wins over the default gate
+    assert probe(9, engage_rows=10) is None
+    assert probe(10, engage_rows=10) is sentinel
     # the measured sub-crossover regimes stay un-engaged by a wide margin
     assert default_rows > 10 * 5 * 10**5  # >10x the M/L seen sets
 

@@ -306,3 +306,32 @@ def test_kill_during_bloom_delta_commit_resume_identical(
         map(tuple, b.read(spark, "bloomshards").drop("bits").collect())
     )
     assert sa == sb
+
+
+class FailingCommit(SnapStore):
+    """Raises from every commit after the bootstrap — a round that dies
+    after its caches are filled but before anything is written."""
+
+    def commit_state(self, sid, tables, metrics=None, **kwargs):
+        if sid > 0:
+            raise RuntimeError("simulated commit failure")
+        return super().commit_state(sid, tables, metrics, **kwargs)
+
+
+def test_failed_round_releases_its_caches(spark, xs, tmp_path_factory):
+    """run_round persists three frames per round (robots-tagged
+    candidates, extraction output, the range-partitioned fetch_seq slice).
+    An exception mid-round must unpersist them just like a clean round —
+    a long-lived session would otherwise accumulate them."""
+    corpus, corpus_dir = xs
+    tables = load_corpus(spark, corpus_dir)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    store = FailingCommit(str(tmp_path_factory.mktemp("leak")))
+    with pytest.raises(RuntimeError, match="simulated commit failure"):
+        run_crawl(
+            spark, store, tables["pages"], tables["robots"],
+            tables["seeds"], _cfg(corpus),
+        )
+    assert store.latest() == 0
+    assert jsc.getPersistentRDDs().size() == before
