@@ -14,11 +14,12 @@ Scale notes (the 10^10 story, SURVEY.md §4):
 - The pages index join keys on url_hash; at cluster scale pages is bucketed
   the same way.  Only (url_hash, html) for the ≤ Σ B(host) SELECTED rows
   per round crosses the wire — html is pruned everywhere else.
-- fetch_seq uses a single-partition window over the per-round SELECTED set
-  (bounded by Σ B(host), i.e. politeness-budget-sized, NOT frontier-sized)
-  — per-round selected sets are orders of magnitude smaller than the
-  frontier, so this is safe at scale; the frontier itself never passes
-  through a global window.
+- fetch_seq is a dense rank by url over the per-round SELECTED set
+  (bounded by Σ B(host), i.e. politeness-budget-sized, NOT frontier-sized),
+  computed without a single-partition window: a slim (url, url_hash)
+  projection is range-partitioned by url, ranked within each partition,
+  and offset by per-partition counts (_global_seq_by_url).  The frontier
+  itself never passes through a global window.
 - The optional bloom pre-filter (engine/filters.py) prunes the anti-join
   probe side; the exact anti-join stays authoritative (filters prune,
   never decide).

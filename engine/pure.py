@@ -12,8 +12,8 @@ text per url"):
 The Spark engine wraps them in vectorized pandas UDFs (engine/udfs.py); the
 refspec oracle (refspec/crawler.py) and the fixture generator
 (fixtures/gen.py) call them directly.  Byte-identity across the two paths is
-therefore *by construction*, and tests/test_pure.py additionally asserts the
-vectorized path equals the scalar path on the same inputs.
+therefore *by construction*, and tests/test_properties.py additionally
+asserts the vectorized path equals the scalar path on the same inputs.
 
 No imports beyond the stdlib.  Determinism: no wall clock, no unseeded RNG,
 no dict-order dependence in outputs (all collections sorted before emit).
@@ -212,12 +212,20 @@ _BLOCK_TAGS = frozenset(
 )
 
 
-class _TextExtractor(HTMLParser):
+class _CombinedExtractor(HTMLParser):
+    """The HTMLParser reference path of the pinned dialect (F3 and F4).
+
+    Text (script/style skipped, block boundaries flushed, whitespace
+    collapsed) and raw <a href> targets react to disjoint aspects of the
+    same event stream, so one ``feed`` yields both — each page is parsed
+    once whichever of the two the caller wants."""
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self._blocks: list[str] = []
         self._buf: list[str] = []
         self._skip = 0
+        self.hrefs: list[str] = []
 
     def _flush(self) -> None:
         raw = "".join(self._buf)
@@ -227,6 +235,10 @@ class _TextExtractor(HTMLParser):
             self._blocks.append(collapsed)
 
     def handle_starttag(self, tag, attrs):  # noqa: D102
+        if tag == "a":
+            for k, v in attrs:
+                if k == "href" and v:
+                    self.hrefs.append(v)
         if tag in _SKIP_TAGS:
             self._skip += 1
         elif tag in _BLOCK_TAGS:
@@ -242,7 +254,7 @@ class _TextExtractor(HTMLParser):
         if not self._skip:
             self._buf.append(data)
 
-    def result(self) -> str:
+    def text(self) -> str:
         self._flush()
         return "\n".join(self._blocks)
 
@@ -361,21 +373,27 @@ def _fast_scan(html: str) -> tuple[str, list[str]] | None:
     return "\n".join(blocks), hrefs
 
 
+def _scan(html: bytes | str) -> tuple[str, list[str]]:
+    """(text, raw hrefs) of one page: decode bytes, try the guarded fast
+    scanner, else run the _CombinedExtractor reference path."""
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        html = bytes(html).decode("utf-8", "replace")
+    fast = _fast_scan(html)
+    if fast is not None:
+        return fast
+    p = _CombinedExtractor()
+    p.feed(html)
+    p.close()
+    return p.text(), p.hrefs
+
+
 def html_to_text(html: bytes | str | None) -> str | None:
     """Pinned extractor dialect (SURVEY.md §2 F3): stdlib ``html.parser``,
     script/style dropped, whitespace runs collapsed to single spaces,
     block-level boundaries emit ``\\n``.  None → None."""
     if html is None:
         return None
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", "replace")
-    fast = _fast_scan(html)
-    if fast is not None:
-        return fast[0]
-    p = _TextExtractor()
-    p.feed(html)
-    p.close()
-    return p.result()
+    return _scan(html)[0]
 
 
 # --------------------------------------------------------------------------
@@ -384,8 +402,8 @@ def html_to_text(html: bytes | str | None) -> str | None:
 
 
 def _canon_links(hrefs: list[str], base_url: str | None) -> list[str]:
-    """Resolve + canonicalize + dedupe + sort href targets (shared by the
-    single-pass and two-pass extractors — one implementation, one dialect)."""
+    """Resolve + canonicalize + dedupe + sort href targets (shared by
+    extract_links and extract_text_and_links — one dialect)."""
     out: set[str] = set()
     for href in hrefs:
         try:
@@ -396,54 +414,6 @@ def _canon_links(hrefs: list[str], base_url: str | None) -> list[str]:
         if c is not None:
             out.add(c)
     return sorted(out)
-
-
-class _CombinedExtractor(HTMLParser):
-    """Single-pass union of _TextExtractor and _LinkExtractor.
-
-    The two extractors react to disjoint aspects of the same event stream
-    (text: skip/block/data; links: <a href>), so one ``feed`` produces both
-    results byte-identically to two separate passes — asserted for every
-    fixture page in tests/test_properties.py.  This halves the parse cost
-    of the crawl hot path (parsing dominates extraction CPU)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._blocks: list[str] = []
-        self._buf: list[str] = []
-        self._skip = 0
-        self.hrefs: list[str] = []
-
-    def _flush(self) -> None:
-        raw = "".join(self._buf)
-        self._buf = []
-        collapsed = " ".join(raw.split())
-        if collapsed:
-            self._blocks.append(collapsed)
-
-    def handle_starttag(self, tag, attrs):  # noqa: D102
-        if tag == "a":
-            for k, v in attrs:
-                if k == "href" and v:
-                    self.hrefs.append(v)
-        if tag in _SKIP_TAGS:
-            self._skip += 1
-        elif tag in _BLOCK_TAGS:
-            self._flush()
-
-    def handle_endtag(self, tag):  # noqa: D102
-        if tag in _SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-        elif tag in _BLOCK_TAGS:
-            self._flush()
-
-    def handle_data(self, data):  # noqa: D102
-        if not self._skip:
-            self._buf.append(data)
-
-    def text(self) -> str:
-        self._flush()
-        return "\n".join(self._blocks)
 
 
 def compress_html(html: bytes | str | None) -> bytes | None:
@@ -488,27 +458,8 @@ def extract_text_and_links(
     parsed once, not twice."""
     if html is None:
         return None, None
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", "replace")
-    fast = _fast_scan(html)
-    if fast is not None:
-        return fast[0], _canon_links(fast[1], base_url)
-    p = _CombinedExtractor()
-    p.feed(html)
-    p.close()
-    return p.text(), _canon_links(p.hrefs, base_url)
-
-
-class _LinkExtractor(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.hrefs: list[str] = []
-
-    def handle_starttag(self, tag, attrs):  # noqa: D102
-        if tag == "a":
-            for k, v in attrs:
-                if k == "href" and v:
-                    self.hrefs.append(v)
+    text, hrefs = _scan(html)
+    return text, _canon_links(hrefs, base_url)
 
 
 def extract_links(html: bytes | str | None, base_url: str | None) -> list[str] | None:
@@ -516,12 +467,4 @@ def extract_links(html: bytes | str | None, base_url: str | None) -> list[str] |
     (F1), deduplicated, sorted.  None html → None."""
     if html is None:
         return None
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", "replace")
-    fast = _fast_scan(html)
-    if fast is not None:
-        return _canon_links(fast[1], base_url)
-    p = _LinkExtractor()
-    p.feed(html)
-    p.close()
-    return _canon_links(p.hrefs, base_url)
+    return _canon_links(_scan(html)[1], base_url)

@@ -7,6 +7,8 @@ rows).  All settings are plain Apache Spark configuration keys.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 ENGINE_CONFS = {
@@ -77,33 +79,18 @@ def get_spark(
     # provide LOCAL_DIRS/emptyDir and override spark.local.dir, so this is
     # inert on a cluster).  tmpfs keeps the measured cost the engine's,
     # not the shared disk's.
-    import os as _os_ld
-
-    if _os_ld.path.isdir("/dev/shm"):
-        _ld = "/dev/shm/spark-local"
-        _os_ld.makedirs(_ld, exist_ok=True)
-        b = b.config("spark.local.dir", _ld)
+    if os.path.isdir("/dev/shm"):
+        local_dir = "/dev/shm/spark-local"
+        os.makedirs(local_dir, exist_ok=True)
+        b = b.config("spark.local.dir", local_dir)
     # the daemon process imports engine.fastdaemon BEFORE py-files setup,
     # so the package root must be on the worker python path (cluster
     # equivalent: --conf spark.executorEnv.PYTHONPATH=engine.zip)
-    import os as _os
-
-    _repo_root = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    _worker_pp = _os.pathsep.join(
-        p
-        for p in [_repo_root, _os.environ.get("PYTHONPATH", "")]
-        if p
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_pp = os.pathsep.join(
+        p for p in [repo_root, os.environ.get("PYTHONPATH", "")] if p
     )
-    b = b.config("spark.executorEnv.PYTHONPATH", _worker_pp)
+    b = b.config("spark.executorEnv.PYTHONPATH", worker_pp)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    # experiment escape hatch: JSON dict of config overrides, applied last
-    # (used by the bench harness for config A/B runs; never set in tests)
-    import json as _json
-    import os as _os
-
-    env_conf = _os.environ.get("SPARK_GRAFT_CONF_JSON")
-    if env_conf:
-        for k, v in _json.loads(env_conf).items():
-            b = b.config(k, str(v))
     return b.getOrCreate()

@@ -10,7 +10,6 @@ makes byte-identity an invariant by construction rather than a hope
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -74,26 +73,15 @@ def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-# struct returned by extract_both: text + canonical outlinks in ONE parse —
-# html crosses the Arrow boundary once and is parsed once (engine/pure.py
-# extract_text_and_links), instead of once per F3/F4 UDF
+# struct returned by extract_both_z_udf: text + canonical outlinks in ONE
+# parse — html crosses the Arrow boundary once and is parsed once
+# (engine/pure.py extract_text_and_links), instead of once per F3/F4 UDF
 EXTRACT_BOTH_TYPE = StructType(
     [
         StructField("text", StringType(), True),
         StructField("links", ArrayType(StringType()), True),
     ]
 )
-
-
-@F.pandas_udf(EXTRACT_BOTH_TYPE)
-def extract_both_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    texts: list[str | None] = []
-    links: list[list[str] | None] = []
-    for b, u in zip(html, base_url):
-        t, ls = extract_text_and_links(b, u) if b is not None else (None, None)
-        texts.append(t)
-        links.append(ls)
-    return pd.DataFrame({"text": texts, "links": pd.Series(links, dtype=object)})
 
 
 @F.pandas_udf(BinaryType())
@@ -106,10 +94,11 @@ def compress_html_udf(html: pd.Series) -> pd.Series:
 
 @F.pandas_udf(EXTRACT_BOTH_TYPE)
 def extract_both_z_udf(html_z: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    """extract_both over the COMPRESSED pages index: inflate each selected
-    page inside the same Arrow batch, parse once, drop the bytes.  Exact
-    equivalence with extract_both_udf(html) holds because zlib round-trips
-    losslessly (tests/test_pure_fast.py::test_html_z_roundtrip)."""
+    """Text + canonical outlinks over the COMPRESSED pages index: inflate
+    each selected page inside the same Arrow batch, parse once, drop the
+    bytes.  The result equals extract_text_and_links on the original html
+    because zlib round-trips losslessly
+    (tests/test_pure_fast.py::test_html_z_roundtrip)."""
     texts: list[str | None] = []
     links: list[list[str] | None] = []
     for zb, u in zip(html_z, base_url):
@@ -121,19 +110,3 @@ def extract_both_z_udf(html_z: pd.Series, base_url: pd.Series) -> pd.DataFrame:
         texts.append(t)
         links.append(ls)
     return pd.DataFrame({"text": texts, "links": pd.Series(links, dtype=object)})
-
-
-def register_sql_udfs(spark) -> None:
-    """Register the UDFs for spark.sql parity tests (SURVEY.md §2 I)."""
-    spark.udf.register("canon_url", canon_udf)
-    spark.udf.register("url_hash64", hash64_udf)
-    spark.udf.register("extract_text", extract_text_udf)
-    spark.udf.register("extract_links", extract_links_udf)
-
-
-# numpy helper used by the probabilistic filters (engine/filters.py): hash a
-# pandas Series of canonical urls to uint64 lanes without Python loops over
-# hash *use* sites (the sha256 itself is per-element, identical to hash64).
-def hashes_u64(urls: pd.Series) -> np.ndarray:
-    vals = urls.map(lambda u: hash64(u) & 0xFFFFFFFFFFFFFFFF)
-    return np.asarray(vals, dtype=np.uint64)
