@@ -130,7 +130,7 @@ def _bench_corpus_dir(sf: float) -> tuple[str, int, int]:
 
 def bench_crawl(spark, sf: float) -> dict:
     """North-rule throughput: URLs fetched+deduped/sec over ROUNDS rounds."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from engine.crawl import EngineConfig, pages_index, run_round
     from engine.frontier import frontier_from_seeds
@@ -166,10 +166,17 @@ def bench_crawl(spark, sf: float) -> dict:
         .select("url_hash", "url", F.lit(-1).alias("fetched_round"))
     )
     n_seen0 = seen0.persist().count()
+    # the frontier row count rides the bootstrap write (as in
+    # engine.crawl.bootstrap): run_round sizes its shuffles from it
+    fobs = Observation()
+    frontier0 = frontier_from_seeds(seeds).observe(
+        fobs, F.count(F.lit(1)).alias("frontier_rows")
+    )
     store.commit_state(
         0,
-        {"frontier": frontier_from_seeds(seeds), "seen": seen0},
+        {"frontier": frontier0, "seen": seen0},
         {"round": -1, "n_seen_end": int(n_seen0)},
+        metrics_fn=lambda: {"frontier_rows": int(fobs.get["frontier_rows"])},
     )
 
     budget = max(8, (mean_pages * 3) // (4 * ROUNDS))

@@ -11,6 +11,15 @@ Scale notes (the 10^10 story, SURVEY.md §4):
   exchange on (host, salt) then host, frontier-merge exchange on url_hash.
   With frontier+seen stored bucketed by url_hash (Iceberg bucket(url_hash))
   the url_hash exchanges become storage-partitioned no-ops.
+- Partitions per round: every shuffle of a round runs at
+  n_round = min(P, cores x ceil(frontier_rows / (cores x batch)))
+  (round_partitions; P = spark.sql.shuffle.partitions, cores =
+  defaultParallelism, batch = the pinned 1,000-row in-memory cache batch,
+  frontier_rows from the previous manifest).  A small round runs whole
+  waves of one task per core instead of P mostly-empty tasks, each paying
+  task deserialization and an Arrow UDF call; a round above about
+  P x batch frontier rows keeps P, so cluster-scale rounds are unchanged.
+  The cached pages index keeps P (it is planned once, outside any round).
 - The pages index join keys on url_hash; at cluster scale pages is bucketed
   the same way.  Only (url_hash, html) for the ≤ Σ B(host) SELECTED rows
   per round crosses the wire — html is pruned everywhere else.
@@ -57,7 +66,46 @@ class EngineConfig:
     salt: int = 8  # politeness-window salt groups (1 = single-phase)
 
 
-class static_planning:
+class session_conf:
+    """Scoped override of one session conf key, restored on any exit.
+
+    Restoring distinguishes "explicitly set on this session" from
+    "inheriting the default": restoring an inherited default as an
+    explicit value would pin it for the rest of the session even on
+    deployments whose build default differs, so an inherited key is unset
+    again instead.  ``get()`` with a None default returns None iff the key
+    is unset on this session.  Both are recorded before the conf is
+    touched, so a failing ``set()`` loses nothing.
+
+    Usable as a context manager or through ``apply()``/``restore()`` from
+    a caller's own ``finally``.  Not reentrant on one key: nesting would
+    restore the inner override's captured value, i.e. the outer override.
+    """
+
+    def __init__(self, spark: SparkSession, key: str, value: str):
+        self.spark, self.key, self.value = spark, key, value
+
+    def apply(self) -> None:
+        self.prev = self.spark.conf.get(self.key, None)
+        self.was_explicit = self.prev is not None
+        self.spark.conf.set(self.key, self.value)
+
+    def restore(self) -> None:
+        if self.was_explicit:
+            self.spark.conf.set(self.key, self.prev)
+        else:
+            self.spark.conf.unset(self.key)
+
+    def __enter__(self):
+        self.apply()
+        return self
+
+    def __exit__(self, *exc):
+        self.restore()
+        return False
+
+
+class static_planning(session_conf):
     """Context manager: disable adaptive query execution for the crawl
     loop, restoring the previous setting on exit.
 
@@ -77,33 +125,27 @@ class static_planning:
     The override mutates shared SparkSession state: run_crawl assumes
     exclusive use of its session while it runs (concurrent ad-hoc queries
     on the same session would silently run with AQE off — give them their
-    own ``spark.newSession()``).  Not reentrant: nesting would restore the
-    inner manager's captured value, i.e. "false".
+    own ``spark.newSession()``).
     """
 
     KEY = "spark.sql.adaptive.enabled"
 
     def __init__(self, spark: SparkSession):
-        self.spark = spark
+        super().__init__(spark, self.KEY, "false")
 
-    def __enter__(self):
-        # Distinguish "explicitly set on this session" from "inheriting the
-        # default": restoring an inherited default as an explicit value
-        # would pin it for the rest of the session even on deployments
-        # whose build default differs.  get() with a None default returns
-        # None iff the key is unset on this session.  Both are recorded
-        # before the conf is touched, so a failing set() loses nothing.
-        self.prev = self.spark.conf.get(self.KEY, None)
-        self.was_explicit = self.prev is not None
-        self.spark.conf.set(self.KEY, "false")
-        return self
 
-    def __exit__(self, *exc):
-        if self.was_explicit:
-            self.spark.conf.set(self.KEY, self.prev)
-        else:
-            self.spark.conf.unset(self.KEY)
-        return False
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
+def round_partitions(
+    p: int, cores: int, batch: int, frontier_rows: int
+) -> int:
+    """Shuffle partitions for a round whose frontier has ``frontier_rows``
+    rows: whole waves of one task per core, one cache batch per task per
+    wave, capped at the session's ``p`` — min(p, cores x ceil(rows /
+    (cores x batch))).  An empty frontier still gets one wave."""
+    waves = max(1, -(-frontier_rows // (cores * batch)))
+    return min(p, cores * waves)
 
 
 def _global_seq_by_url(
@@ -113,8 +155,8 @@ def _global_seq_by_url(
 
     Phase 1: range-partition by url (partitions are ordered slices of the
     url domain).  Phase 2: row_number within each partition (parallel).
-    Phase 3: add each partition's cumulative base — a P-row collect on the
-    persisted range-partitioned frame, folded in as a literal map.
+    Phase 3: add each partition's cumulative base — an n_par-row collect on
+    the persisted range-partitioned frame, folded in as a literal map.
     fetch_seq = offset + base[pid] + local_rank - 1 == offset + global rank
     by url, independent of where the range sampler places the boundaries.
 
@@ -183,7 +225,7 @@ def pages_index(pages: DataFrame) -> DataFrame:
     This is the local analog of storing pages bucketed by url_hash in
     Iceberg (storage-partitioned join)."""
     spark = pages.sparkSession
-    n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_par = int(spark.conf.get(SHUFFLE_KEY))
     h = (
         pages.withColumn("url_hash", hash64_udf("url"))
         .withColumn("html_z", compress_html_udf("html"))
@@ -249,31 +291,54 @@ def run_round(
     partition-counts collect (which also fills the ext/tagged caches),
     about 2 parquet schema/listing reads, and about 5 across the four
     table writes submitted in PARALLEL, broadcast builds included.
+
+    Tasks per round: every shuffle the round plans runs at
+    ``round_partitions(P, cores, batch, frontier_rows)`` (module scale
+    notes) — a scoped override of ``spark.sql.shuffle.partitions``,
+    restored in the ``finally`` below on any exit.  budget_round's 3,816
+    frontier rows at P=12 on local[4] plan at 4, which cuts it from 214 to
+    86 tasks/round at the same 14 jobs (a one-round S crawl: 207 to 87 at
+    15 jobs), and task deserialization from 2.9 to 1.1 s/round.
     """
-    frontier = store.read(spark, "frontier", rnd)
-    seen = store.read(spark, "seen", rnd)
-
-    # 1. candidates := frontier ANTI seen (op C1).  With a bloom filter the
-    # probe side splits: `_maybe_seen` rows take the exact anti-join,
-    # provably-unseen rows skip it (no false negatives ⇒ identical result —
-    # filters prune, never decide; equivalence-tested in tests/test_filters).
-    seen_keys = seen.select("url_hash")
-    if seen_filter is not None:
-        tagged0 = seen_filter(frontier)
-        maybe = tagged0.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        definite = tagged0.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        cand = maybe.join(seen_keys, "url_hash", "left_anti").unionByName(
-            definite
-        )
-    else:
-        cand = frontier.join(seen_keys, "url_hash", "left_anti")
-
-    # 2. robots gate (op B4): blocked rows exit to seen, no lineage.
-    # PERSISTED: the politeness path (allowed) and the seen delta (blocked)
-    # both read it, so the anti-join + gate run once per round, not twice.
-    tagged = robots_gate(cand, robots).persist()
-    ext = rp_slim = None
+    m_prev = store.manifest(rnd)["metrics"]
+    n_par = round_partitions(
+        int(spark.conf.get(SHUFFLE_KEY)),
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.inMemoryColumnarStorage.batchSize")),
+        m_prev["frontier_rows"],
+    )
+    # every shuffle this round plans — explicit repartitions, politeness
+    # windows, anti-joins, frontier merge, the four writes — runs at n_par
+    shuffle = session_conf(spark, SHUFFLE_KEY, str(n_par))
+    shuffle.apply()
+    tagged = ext = rp_slim = None
     try:
+        frontier = store.read(spark, "frontier", rnd)
+        seen = store.read(spark, "seen", rnd)
+
+        # 1. candidates := frontier ANTI seen (op C1).  With a bloom filter
+        # the probe side splits: `_maybe_seen` rows take the exact anti-join,
+        # provably-unseen rows skip it (no false negatives ⇒ identical
+        # result — filters prune, never decide; equivalence-tested in
+        # tests/test_filters).
+        seen_keys = seen.select("url_hash")
+        if seen_filter is not None:
+            tagged0 = seen_filter(frontier)
+            maybe = tagged0.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+            definite = tagged0.filter(~F.col("_maybe_seen")).drop(
+                "_maybe_seen"
+            )
+            cand = maybe.join(seen_keys, "url_hash", "left_anti").unionByName(
+                definite
+            )
+        else:
+            cand = frontier.join(seen_keys, "url_hash", "left_anti")
+
+        # 2. robots gate (op B4): blocked rows exit to seen, no lineage.
+        # PERSISTED: the politeness path (allowed) and the seen delta
+        # (blocked) both read it, so the anti-join + gate run once per
+        # round, not twice.
+        tagged = robots_gate(cand, robots).persist()
         blocked = tagged.filter(F.col("robots_blocked")).drop("robots_blocked")
         allowed = tagged.filter(~F.col("robots_blocked")).drop("robots_blocked")
 
@@ -283,14 +348,20 @@ def run_round(
         )
 
         # 4. fetch = left join pages index on url_hash (ops C4/C5).  The
-        # selected side is repartitioned to HashPartitioning(url_hash, P)
-        # FIRST, for two reasons: (a) it matches the persisted pages index's
-        # pinned partitioning, so the join needs no exchange on the html side;
+        # selected side is repartitioned on url_hash FIRST, for two reasons:
+        # (a) the persisted pages index is pinned to HashPartitioning
+        # (url_hash, P), so a shuffled join needs no exchange on the html
+        # side — when n_par != P the planner re-targets this repartition to
+        # the index's P partitions instead of moving the index;
         # (b) the fetch batch is politeness-budget-sized (small in BYTES), and
         # AQE's byte-based coalescing would otherwise shrink it to a few
         # partitions and serialize the CPU-bound Arrow extraction downstream —
-        # UDF stages are CPU-sized, not byte-sized.
-        n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # UDF stages are CPU-sized, not byte-sized.  At budget_round's size
+        # the planner broadcasts the WHOLE cached index (about 7 MB) every
+        # round instead — BroadcastHashJoin LeftOuter BuildRight, and the
+        # selected side keeps n_par partitions — because AQE is off and the
+        # InMemoryRelation's size estimate is under the 10 MiB
+        # autoBroadcastJoinThreshold.
         fetched = selected.repartition(n_par, "url_hash").join(
             pages_idx.select("url_hash", "html_z"), "url_hash", "left"
         )
@@ -317,11 +388,12 @@ def run_round(
         # single-partition Window.orderBy (that serializes the whole selected
         # set through one task — an OOM at cluster-scale budgets): range-
         # partition a SLIM (url, url_hash) projection, rank locally per
-        # partition, add per-partition base offsets (one P-row counts collect
-        # on the persisted slim frame — the round's only action before the
-        # writes, which also fills the ext/tagged caches), then join fetch_seq
-        # back 1:1 on the url_hash partitioning ext already carries — the wide
-        # text/links columns never cross the range exchange.
+        # partition, add per-partition base offsets (one n_par-row counts
+        # collect on the persisted slim frame — the round's only action
+        # before the writes, which also fills the ext/tagged caches), then
+        # join fetch_seq back 1:1 on the url_hash partitioning ext already
+        # carries — the wide text/links columns never cross the range
+        # exchange.
         seq, rp_slim = _global_seq_by_url(
             ext.select("url", "url_hash"), fetch_seq_offset, n_par
         )
@@ -373,7 +445,7 @@ def run_round(
         # filter engage rule (engine/filters.adaptive_seen_filter_factory) is
         # an O(1) JSON read, never a seen-table count: chain from the
         # previous manifest
-        n_seen_prev = store.manifest(rnd)["metrics"]["n_seen_end"]
+        n_seen_prev = m_prev["n_seen_end"]
         sobs = Observation()
         seen_delta_w = seen_delta.observe(
             sobs, F.count(F.lit(1)).alias("n_seen_delta")
@@ -467,10 +539,12 @@ def run_round(
         )
     finally:
         # released on every exit: a round that raises (a failed write, a
-        # killed commit) must not leak its caches into a long-lived session
+        # killed commit) must not leak its caches into a long-lived session,
+        # nor its partition count
         for df in (tagged, ext, rp_slim):
             if df is not None:
                 df.unpersist()
+        shuffle.restore()
 
 
 def run_crawl(

@@ -595,7 +595,7 @@ def run_worker(args) -> dict:
     )
     frontier0 = frontier_from_seeds(seeds).persist()
     seen0 = seen0.persist()
-    frontier0.count()
+    n_frontier0 = frontier0.count()
     n_seen0 = seen0.count()
     warm_sec = time.time() - t0
 
@@ -627,13 +627,10 @@ def run_worker(args) -> dict:
         # frontier/seen frames is unmeasured (bootstrap_sec)
         tb = time.time()
         store = SnapStore(tempfile.mkdtemp(prefix=f"scale{cpus}_"))
-        # n_seen_end at bootstrap keeps the adaptive/metric chain O(1) —
-        # without it run_round's one-time count fallback would land inside
-        # measured round 0
         store.commit_state(
             0,
             {"frontier": frontier0, "seen": seen0},
-            {"n_seen_end": int(n_seen0)},
+            {"n_seen_end": int(n_seen0), "frontier_rows": int(n_frontier0)},
         )
         boot_sec = time.time() - tb
         rounds = []

@@ -105,3 +105,23 @@ def test_static_planning_restores_session_state(spark):
         assert spark.conf.get(KEY) == default
     finally:
         spark.conf.unset(KEY)
+
+
+@pytest.mark.parametrize(
+    "p, cores, batch, frontier_rows, n",
+    [
+        (12, 4, 1000, 8, 4),
+        (12, 4, 1000, 3816, 4),
+        (12, 4, 1000, 4001, 8),
+        (12, 4, 1000, 10**6, 12),
+        (48, 2, 1000, 93194, 48),
+        (2, 8, 1000, 5, 2),
+    ],
+)
+def test_round_partitions_rule(p, cores, batch, frontier_rows, n):
+    """A round's shuffles run in whole waves of one task per core, one
+    cache batch of frontier rows per task per wave, capped at the
+    session's partition count."""
+    from engine.crawl import round_partitions
+
+    assert round_partitions(p, cores, batch, frontier_rows) == n

@@ -32,7 +32,10 @@ def test_filter_and_projection_pushed_to_parquet_scan(spark):
 def test_fetch_join_reuses_cached_pages_index_partitioning(spark, corpus_dir):
     """The persisted pages index carries HashPartitioning(url_hash, P); the
     per-round fetch join must NOT re-shuffle the html side (engine/crawl.py
-    step 4) — only the politeness-sized selected side gets one exchange."""
+    step 4) — only the politeness-sized selected side gets one exchange.
+    That holds too when a small round repartitions the selected side to
+    fewer partitions than the index holds: the planner re-targets the
+    selected side's exchange to the index's P."""
     from engine.crawl import pages_index
     from engine.io import load_corpus
 
@@ -43,23 +46,30 @@ def test_fetch_join_reuses_cached_pages_index_partitioning(spark, corpus_dir):
         pidx.count()
         n_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
         selected = pidx.select("url_hash").limit(10)
-        joined = selected.repartition(n_par, "url_hash").join(
-            pidx.select("url_hash", "html_z"), "url_hash", "left"
-        )
-        plan = _plan(joined)
-        assert "InMemoryTableScan" in plan
-        # exactly one hash exchange at JOIN level: the REPARTITION_BY_NUM on
-        # the selected side.  (The InMemoryRelation node embeds its own
-        # BUILD-time plan text — exchanges in there ran once at cache build,
-        # not per join, so only count the text before the first cache node.)
-        join_level = plan.split("InMemoryRelation")[0]
-        assert join_level.count("Exchange hashpartitioning(url_hash") == 1, plan
-        # and the cached html side feeds the join with NO exchange and NO
-        # re-sort: between the join and its InMemoryTableScan there is only
-        # the null filter (the window's build-time sort already satisfies
-        # SMJ's ordering requirement)
-        right = plan.split("+- Filter isnotnull", 1)[1].split("InMemoryRelation")[0]
-        assert "Exchange" not in right and "Sort" not in right, plan
+        for n_sel in (n_par, n_par // 2):
+            joined = selected.repartition(n_sel, "url_hash").join(
+                pidx.select("url_hash", "html_z"), "url_hash", "left"
+            )
+            plan = _plan(joined)
+            assert "InMemoryTableScan" in plan
+            # exactly one hash exchange at JOIN level: the REPARTITION_BY_NUM
+            # on the selected side, at the index's partition count.  (The
+            # InMemoryRelation node embeds its own BUILD-time plan text —
+            # exchanges in there ran once at cache build, not per join, so
+            # only count the text before the first cache node.)
+            join_level = plan.split("InMemoryRelation")[0]
+            exchanges = join_level.count("Exchange hashpartitioning(url_hash")
+            assert exchanges == 1, plan
+            assert f", {n_par}), REPARTITION_BY_NUM" in join_level, plan
+            # and the cached html side feeds the join with NO exchange and NO
+            # re-sort: between the join and its InMemoryTableScan there is
+            # only the null filter (the window's build-time sort already
+            # satisfies SMJ's ordering requirement)
+            right = plan.split("+- Filter isnotnull", 1)[1].split(
+                "InMemoryRelation"
+            )[0]
+            assert "Exchange" not in right and "Sort" not in right, plan
+            assert joined.rdd.getNumPartitions() == n_par
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         pidx.unpersist()

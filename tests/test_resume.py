@@ -310,28 +310,42 @@ def test_kill_during_bloom_delta_commit_resume_identical(
 
 class FailingCommit(SnapStore):
     """Raises from every commit after the bootstrap — a round that dies
-    after its caches are filled but before anything is written."""
+    after its caches are filled but before anything is written.  Records
+    the session's shuffle partition count the failing commit plans under."""
 
     def commit_state(self, sid, tables, metrics=None, **kwargs):
         if sid > 0:
+            conf = next(iter(tables.values())).sparkSession.conf
+            self.round_partitions = conf.get("spark.sql.shuffle.partitions")
             raise RuntimeError("simulated commit failure")
         return super().commit_state(sid, tables, metrics, **kwargs)
 
 
 def test_failed_round_releases_its_caches(spark, xs, tmp_path_factory):
     """run_round persists three frames per round (robots-tagged
-    candidates, extraction output, the range-partitioned fetch_seq slice).
-    An exception mid-round must unpersist them just like a clean round —
-    a long-lived session would otherwise accumulate them."""
+    candidates, extraction output, the range-partitioned fetch_seq slice)
+    and overrides the session's shuffle partitions for the round.  An
+    exception mid-round must unpersist the frames and restore the
+    partition count just like a clean round — a long-lived session would
+    otherwise accumulate them.  At 24 session partitions on 8 cores the
+    small XS round plans at one wave of 8."""
     corpus, corpus_dir = xs
     tables = load_corpus(spark, corpus_dir)
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    store = FailingCommit(str(tmp_path_factory.mktemp("leak")))
-    with pytest.raises(RuntimeError, match="simulated commit failure"):
-        run_crawl(
-            spark, store, tables["pages"], tables["robots"],
-            tables["seeds"], _cfg(corpus),
-        )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "24")
+    try:
+        store = FailingCommit(str(tmp_path_factory.mktemp("leak")))
+        with pytest.raises(RuntimeError, match="simulated commit failure"):
+            run_crawl(
+                spark, store, tables["pages"], tables["robots"],
+                tables["seeds"], _cfg(corpus),
+            )
+        assert store.round_partitions == "8"
+        assert spark.conf.get(key) == "24"
+    finally:
+        spark.conf.set(key, prev)
     assert store.latest() == 0
     assert jsc.getPersistentRDDs().size() == before
