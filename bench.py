@@ -45,6 +45,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -307,9 +308,11 @@ def main() -> int:
                 f"{[s['fetched_urls'] for s in samples]}",
                 file=sys.stderr,
             )
+        # interpolated median; the representative sample is the one
+        # nearest it (an even count happens when a sample fails)
         secs = sorted(s["sec"] for s in samples)
-        med_sec = secs[len(secs) // 2]
-        crawl = dict(next(s for s in samples if s["sec"] == med_sec))
+        med_sec = round(statistics.median(secs), 3)
+        crawl = dict(min(samples, key=lambda s: abs(s["sec"] - med_sec)))
         crawl["median_sec"] = med_sec
         crawl["samples"] = [
             {"sec": s["sec"], "urls_per_sec": s["urls_per_sec"]}
@@ -347,7 +350,7 @@ def main() -> int:
             _force(spec.fn(spark, SF_DIR))
             samples.append(round(time.time() - t0, 3))
         cold[name] = samples[0]
-        times[name] = sorted(samples)[len(samples) // 2]
+        times[name] = round(statistics.median(samples), 3)
 
     times["crawl_3rounds"] = crawl["median_sec"]
 

@@ -25,10 +25,11 @@ Scale notes (the 10^10 story, SURVEY.md §4):
   per round crosses the wire — html is pruned everywhere else.
 - fetch_seq is a dense rank by url over the per-round SELECTED set
   (bounded by Σ B(host), i.e. politeness-budget-sized, NOT frontier-sized),
-  computed without a single-partition window: a slim (url, url_hash)
-  projection is range-partitioned by url, ranked within each partition,
-  and offset by per-partition counts (_global_seq_by_url).  The frontier
-  itself never passes through a global window.
+  computed without a single-partition window: the narrow lineage rows are
+  range-partitioned by url, ranked within each partition and offset by
+  per-partition counts (_global_seq_by_url); text and links never cross
+  that exchange.  The frontier itself never passes through a global
+  window.
 - The optional bloom pre-filter (engine/filters.py) prunes the anti-join
   probe side; the exact anti-join stays authoritative (filters prune,
   never decide).
@@ -67,34 +68,35 @@ class EngineConfig:
 
 
 class session_conf:
-    """Scoped override of one session conf key, restored on any exit.
+    """Scoped override of session conf keys, restored on any exit.
 
     Restoring distinguishes "explicitly set on this session" from
     "inheriting the default": restoring an inherited default as an
     explicit value would pin it for the rest of the session even on
     deployments whose build default differs, so an inherited key is unset
     again instead.  ``get()`` with a None default returns None iff the key
-    is unset on this session.  Both are recorded before the conf is
-    touched, so a failing ``set()`` loses nothing.
+    is unset on this session.  Every key's prior value is recorded before
+    the conf is touched, so a failing ``set()`` loses nothing.
 
     Usable as a context manager or through ``apply()``/``restore()`` from
-    a caller's own ``finally``.  Not reentrant on one key: nesting would
-    restore the inner override's captured value, i.e. the outer override.
+    a caller's own ``finally``.  Nesting is safe: an inner override
+    records the outer one's explicit value and restores exactly that.
     """
 
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
+    def __init__(self, spark: SparkSession, values: dict[str, str]):
+        self.spark, self.values = spark, values
 
     def apply(self) -> None:
-        self.prev = self.spark.conf.get(self.key, None)
-        self.was_explicit = self.prev is not None
-        self.spark.conf.set(self.key, self.value)
+        self.prev = {k: self.spark.conf.get(k, None) for k in self.values}
+        for k, v in self.values.items():
+            self.spark.conf.set(k, v)
 
     def restore(self) -> None:
-        if self.was_explicit:
-            self.spark.conf.set(self.key, self.prev)
-        else:
-            self.spark.conf.unset(self.key)
+        for k, prev in self.prev.items():
+            if prev is not None:
+                self.spark.conf.set(k, prev)
+            else:
+                self.spark.conf.unset(k)
 
     def __enter__(self):
         self.apply()
@@ -106,32 +108,13 @@ class session_conf:
 
 
 class static_planning(session_conf):
-    """Context manager: disable adaptive query execution for the crawl
-    loop, restoring the previous setting on exit.
-
-    Every crawl exchange is explicitly pinned by design (repartition /
-    bucket-analog partitioning; see the module docstring), so AQE's
-    partition coalescing is inert here, and its skew handling is
-    superseded by the host-salted politeness window — the crawl's designed
-    skew strategy.  What AQE still costs is real and linear in rounds:
-    each adaptive query stage is materialized job-by-job with a
-    driver-serial replan between stages, a fixed per-round latency that
-    erodes wide-executor scaling (Amdahl) — measured 1.1-2.0 s/round at
-    local[16] (10-20% of a round), a wash at local[4].  Repeated
-    fixed-shape production plans want static planning; AQE stays the
-    engine default for the ad-hoc/ops suite (engine/session.py), where
-    data-dependent skew (minhash buckets, host rollups) is real.
-
-    The override mutates shared SparkSession state: run_crawl assumes
-    exclusive use of its session while it runs (concurrent ad-hoc queries
-    on the same session would silently run with AQE off — give them their
-    own ``spark.newSession()``).
-    """
+    """Context manager: adaptive query execution off (run_round's
+    docstring says why), the previous setting restored on exit."""
 
     KEY = "spark.sql.adaptive.enabled"
 
     def __init__(self, spark: SparkSession):
-        super().__init__(spark, self.KEY, "false")
+        super().__init__(spark, {self.KEY: "false"})
 
 
 SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -149,9 +132,10 @@ def round_partitions(
 
 
 def _global_seq_by_url(
-    slim: DataFrame, offset: int, n_par: int
+    rows: DataFrame, offset: int, n_par: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Dense global rank over ``url`` without a single-partition window.
+    """``rows`` with a dense global rank over ``url`` appended as
+    ``fetch_seq``, without a single-partition window.
 
     Phase 1: range-partition by url (partitions are ordered slices of the
     url domain).  Phase 2: row_number within each partition (parallel).
@@ -160,18 +144,16 @@ def _global_seq_by_url(
     fetch_seq = offset + base[pid] + local_rank - 1 == offset + global rank
     by url, independent of where the range sampler places the boundaries.
 
-    ``slim`` should be a narrow (url, url_hash) projection: only those two
-    columns cross the range exchange; the caller joins fetch_seq back on
-    url_hash (1:1 — frontier rows are unique per url_hash), so wide columns
-    (text, links) never move for the rank.  The range-partitioned frame is
-    PERSISTED before the counts collect so the counts job and the caller's
-    later write observe the SAME boundaries and pid assignment — without
-    the pin, a cache eviction between the two jobs could re-sample
-    different range boundaries and mis-base the ranks.  Returns
-    (seq=(url_hash, fetch_seq), rp_handle_to_unpersist).
+    Every column of ``rows`` crosses the range exchange, so keep them
+    narrow (the caller passes the lineage columns; text and links stay
+    behind).  The range-partitioned frame is PERSISTED before the counts
+    collect so the counts job and the caller's later write observe the
+    SAME boundaries and pid assignment — without the pin, a cache eviction
+    between the two jobs could re-sample different range boundaries and
+    mis-base the ranks.  Returns (ranked rows, handle to unpersist).
     """
     rp = (
-        slim.repartitionByRange(n_par, "url")
+        rows.repartitionByRange(n_par, "url")
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
@@ -192,13 +174,13 @@ def _global_seq_by_url(
         F.create_map(*kv)[F.col("_pid")] if kv else F.lit(offset)
     )
     w_local = Window.partitionBy("_pid").orderBy("url")
-    seq = rp.select(
-        "url_hash",
+    ranked = rp.select(
+        *rows.columns,
         (base_col + F.row_number().over(w_local) - 1)
         .cast("long")
         .alias("fetch_seq"),
     )
-    return seq, rp
+    return ranked, rp
 
 
 def pages_index(pages: DataFrame) -> DataFrame:
@@ -281,24 +263,41 @@ def run_round(
     store-backed seen filter (engine/filters.StoreBloomFilter /
     StoreCuckooFilter) — correctness-neutral.
 
+    Planning: the round decides it, whoever calls it.  It overrides two
+    session keys at its top and restores both in its ``finally`` on any
+    exit (an inherited key is unset again, an explicit one reset):
+
+    - ``spark.sql.shuffle.partitions`` = ``round_partitions(P, cores,
+      batch, frontier_rows)`` (module scale notes), so every shuffle the
+      round plans runs in whole waves of one task per core;
+    - ``spark.sql.adaptive.enabled`` = false.  Every crawl exchange is
+      pinned by design (explicit repartitions, bucket-analog partitioning),
+      so AQE's partition coalescing is inert here, and its skew handling is
+      superseded by the host-salted politeness window, the crawl's designed
+      skew strategy.  What AQE still costs is real and linear in rounds:
+      each adaptive query stage is materialized job by job with a
+      driver-serial replan between stages, a fixed per-round latency that
+      erodes wide-executor scaling — measured 1.1-2.0 s/round at local[16]
+      (10-20% of a round), a wash at local[4].  AQE stays the session
+      default for the ad-hoc/ops suite (engine/session.py), where
+      data-dependent skew (minhash buckets, host rollups) is real.
+
+    The override mutates shared session state: a round assumes exclusive
+    use of its session while it runs (concurrent queries on the same
+    session would plan under the round's settings; give them their own
+    ``spark.newSession()``).
+
     Spark jobs per round (the scaling-efficiency lever — idle-core gaps
     between jobs are what erode efficiency as cores grow): all round
     metrics are observed on the table writes themselves — no separate
     aggregation, no per-round lineage count, no frontier empty-check job
     (both ride the manifest).  A round is still not one job:
-    ``perfbench/run.py --trace 1`` measures 14 jobs/round on budget_round
-    (15 on a one-round S crawl) — about 7 under the fetch_seq
-    partition-counts collect (which also fills the ext/tagged caches),
-    about 2 parquet schema/listing reads, and about 5 across the four
-    table writes submitted in PARALLEL, broadcast builds included.
-
-    Tasks per round: every shuffle the round plans runs at
-    ``round_partitions(P, cores, batch, frontier_rows)`` (module scale
-    notes) — a scoped override of ``spark.sql.shuffle.partitions``,
-    restored in the ``finally`` below on any exit.  budget_round's 3,816
-    frontier rows at P=12 on local[4] plan at 4, which cuts it from 214 to
-    86 tasks/round at the same 14 jobs (a one-round S crawl: 207 to 87 at
-    15 jobs), and task deserialization from 2.9 to 1.1 s/round.
+    ``perfbench/run.py --trace 1`` (seed 1, local[4], P=12) measures 13
+    jobs and 78 tasks per round on budget_round (14 and 79 on a one-round
+    S crawl).  budget_round's 13 are 2 parquet schema/listing reads, 5
+    under the fetch_seq partition-counts collect (which also fills the
+    ext/tagged caches) and 6 across the four table writes submitted in
+    PARALLEL, broadcast builds included.
     """
     m_prev = store.manifest(rnd)["metrics"]
     n_par = round_partitions(
@@ -308,11 +307,14 @@ def run_round(
         m_prev["frontier_rows"],
     )
     # every shuffle this round plans — explicit repartitions, politeness
-    # windows, anti-joins, frontier merge, the four writes — runs at n_par
-    shuffle = session_conf(spark, SHUFFLE_KEY, str(n_par))
-    shuffle.apply()
-    tagged = ext = rp_slim = None
+    # windows, anti-joins, frontier merge, the four writes — runs at
+    # n_par, statically planned
+    planning = session_conf(
+        spark, {SHUFFLE_KEY: str(n_par), static_planning.KEY: "false"}
+    )
+    tagged = ext = rp_lineage = None
     try:
+        planning.apply()
         frontier = store.read(spark, "frontier", rnd)
         seen = store.read(spark, "seen", rnd)
 
@@ -353,15 +355,14 @@ def run_round(
         # (url_hash, P), so a shuffled join needs no exchange on the html
         # side — when n_par != P the planner re-targets this repartition to
         # the index's P partitions instead of moving the index;
-        # (b) the fetch batch is politeness-budget-sized (small in BYTES), and
-        # AQE's byte-based coalescing would otherwise shrink it to a few
-        # partitions and serialize the CPU-bound Arrow extraction downstream —
-        # UDF stages are CPU-sized, not byte-sized.  At budget_round's size
-        # the planner broadcasts the WHOLE cached index (about 7 MB) every
-        # round instead — BroadcastHashJoin LeftOuter BuildRight, and the
-        # selected side keeps n_par partitions — because AQE is off and the
-        # InMemoryRelation's size estimate is under the 10 MiB
-        # autoBroadcastJoinThreshold.
+        # (b) the fetch batch is politeness-budget-sized, small in bytes but
+        # CPU-heavy to extract: hash-spreading it keeps the Arrow extraction
+        # (and the link explode in step 7) balanced across tasks.  At
+        # budget_round's size the planner broadcasts the WHOLE cached index
+        # (about 7 MB) every round instead — BroadcastHashJoin LeftOuter
+        # BuildRight, and the selected side keeps n_par partitions —
+        # because the round is statically planned and the InMemoryRelation's
+        # size estimate is under the 10 MiB autoBroadcastJoinThreshold.
         fetched = selected.repartition(n_par, "url_hash").join(
             pages_idx.select("url_hash", "html_z"), "url_hash", "left"
         )
@@ -386,20 +387,15 @@ def run_round(
 
         # 6. lineage with dense fetch_seq = global rank by url.  NOT a
         # single-partition Window.orderBy (that serializes the whole selected
-        # set through one task — an OOM at cluster-scale budgets): range-
-        # partition a SLIM (url, url_hash) projection, rank locally per
-        # partition, add per-partition base offsets (one n_par-row counts
-        # collect on the persisted slim frame — the round's only action
-        # before the writes, which also fills the ext/tagged caches), then
-        # join fetch_seq back 1:1 on the url_hash partitioning ext already
-        # carries — the wide text/links columns never cross the range
-        # exchange.
-        seq, rp_slim = _global_seq_by_url(
-            ext.select("url", "url_hash"), fetch_seq_offset, n_par
-        )
-        lineage = (
-            ext.join(seq.repartition(n_par, "url_hash"), "url_hash")
-            .select(
+        # set through one task — an OOM at cluster-scale budgets): the
+        # lineage rows themselves are range-partitioned by url, ranked
+        # locally per partition and offset by per-partition counts (one
+        # n_par-row collect on the persisted range-partitioned rows — the
+        # round's only action before the writes, which also fills the
+        # ext/tagged caches).
+        # Every lineage column is narrow; text and links stay in ext.
+        lineage, rp_lineage = _global_seq_by_url(
+            ext.select(
                 F.lit(rnd).alias("round"),
                 "partition_id",
                 "host",
@@ -412,8 +408,9 @@ def run_round(
                 F.when(F.col("text").isNull(), 0)
                 .otherwise(F.octet_length("text"))
                 .alias("text_bytes"),
-                "fetch_seq",
-            )
+            ),
+            fetch_seq_offset,
+            n_par,
         )
         # round metrics observe the lineage WRITE — no separate agg job.
         # (n_hosts is approx_count_distinct: observed metrics cannot contain
@@ -540,11 +537,11 @@ def run_round(
     finally:
         # released on every exit: a round that raises (a failed write, a
         # killed commit) must not leak its caches into a long-lived session,
-        # nor its partition count
-        for df in (tagged, ext, rp_slim):
+        # nor its planning settings
+        for df in (tagged, ext, rp_lineage):
             if df is not None:
                 df.unpersist()
-        shuffle.restore()
+        planning.restore()
 
 
 def run_crawl(
@@ -578,37 +575,35 @@ def run_crawl(
     pages_idx = pages_index(pages).persist()
     rounds_done = 0
     try:
-        with static_planning(spark):
-            while True:
-                sid = store.latest()
-                rnd = sid  # next round number == current snapshot id
-                if rnd >= cfg.max_rounds:
-                    break
-                # empty-check and fetch_seq offset from the previous
-                # round's manifest metrics: O(1) JSON reads, never a
-                # frontier or lineage scan
-                m_prev = store.manifest(sid)["metrics"]
-                if m_prev["frontier_rows"] == 0:
-                    break
-                seen_filter = (
-                    seen_filter_factory(spark, store, sid)
-                    if seen_filter_factory
-                    else None
-                )
-                run_round(
-                    spark,
-                    store,
-                    rnd,
-                    pages_idx,
-                    robots,
-                    cfg,
-                    m_prev["fetch_seq_end"],
-                    seen_filter,
-                )
-                rounds_done += 1
+        while True:
+            sid = store.latest()
+            rnd = sid  # next round number == current snapshot id
+            if rnd >= cfg.max_rounds:
+                break
+            # empty-check and fetch_seq offset from the previous
+            # round's manifest metrics: O(1) JSON reads, never a
+            # frontier or lineage scan
+            m_prev = store.manifest(sid)["metrics"]
+            if m_prev["frontier_rows"] == 0:
+                break
+            seen_filter = (
+                seen_filter_factory(spark, store, sid)
+                if seen_filter_factory
+                else None
+            )
+            run_round(
+                spark,
+                store,
+                rnd,
+                pages_idx,
+                robots,
+                cfg,
+                m_prev["fetch_seq_end"],
+                seen_filter,
+            )
+            rounds_done += 1
     finally:
-        # same exceptional paths that restore the AQE conf also release
-        # the cached pages index (long-lived sessions would leak it)
+        # released on every exit: long-lived sessions would leak it
         pages_idx.unpersist()
     return rounds_done
 

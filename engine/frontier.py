@@ -69,8 +69,9 @@ def merge_frontier(df: DataFrame) -> DataFrame:
 def frontier_from_seeds(seeds_df: DataFrame) -> DataFrame:
     """Round-0 frontier: canonicalize + hash seeds (Arrow UDF), drop
     invalid urls, lattice-merge duplicates (keep max priority)."""
-    # spread seeds across all cores before the CPU-bound canon UDF (same
-    # AQE-coalesces-by-bytes issue as engine/crawl.py step 5)
+    # spread seeds across all cores before the CPU-bound canon UDF: the
+    # bootstrap runs with the session's AQE, which would coalesce the
+    # small-in-bytes seed set into a few partitions
     n_par = int(
         seeds_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )

@@ -12,26 +12,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DRIVER_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}
 
 
 def load_corpus(spark: SparkSession, corpus_dir: str) -> dict[str, DataFrame]:

@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from engine.io import load_table
 from engine.ops import op
@@ -28,7 +28,6 @@ from engine.textanalysis import (
     LANG_MARKERS,
     band_keys,
     doc_fingerprint,
-    minhash_signature,
     shingle_hashes,
     simhash64,
 )
@@ -53,16 +52,6 @@ def dedup_exact(spark, sf):
         F.count("*").alias("n_dups"),
     )
 
-
-_SIG_SCHEMA = ArrayType(LongType())
-
-
-@F.pandas_udf(_SIG_SCHEMA)
-def _band_keys_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: band_keys(minhash_signature(t or "")))
-
-
-from pyspark.sql.types import StructField, StructType  # noqa: E402
 
 _SKETCH_SCHEMA = StructType(
     [

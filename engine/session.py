@@ -78,8 +78,9 @@ def get_spark(
     # the fs journal; real executors get per-node local SSDs (YARN/K8s
     # provide LOCAL_DIRS/emptyDir and override spark.local.dir, so this is
     # inert on a cluster).  tmpfs keeps the measured cost the engine's,
-    # not the shared disk's.
-    if os.path.isdir("/dev/shm"):
+    # not the shared disk's.  SPARK_LOCAL_DIRS overrides spark.local.dir,
+    # so when it is set the directory is neither created nor configured.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
         b = b.config("spark.local.dir", local_dir)

@@ -97,10 +97,6 @@ def band_keys(sig: np.ndarray) -> list[int]:
     return out
 
 
-def minhash_jaccard_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    return float((sig_a == sig_b).mean())
-
-
 # ------------------------------------------------------------------ simhash
 
 
@@ -135,10 +131,6 @@ def simhash64(text: str) -> int:
     )
     cs = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
     return _simhash_from_counts(hs, cs)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
 
 
 # ------------------------------------------------- rolling-hash fingerprint

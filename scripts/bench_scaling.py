@@ -635,70 +635,63 @@ def run_worker(args) -> dict:
         boot_sec = time.time() - tb
         rounds = []
         offset = 0
-        # the crawl loop runs statically planned, exactly as run_crawl
-        # does (engine/crawl.static_planning: every crawl exchange is
-        # pinned, so AQE only adds a driver-serial replan per query stage
-        # — measured 1.1-2.0 s/round at local[16], a wash at local[4])
-        from engine.crawl import static_planning
-
-        with static_planning(spark):
-            for r in range(args.rounds):
-                sfilter = factory(spark, store, r) if factory else None
-                tr = time.time()
-                cpu0 = _tree_cpu_seconds()
-                split0 = dict(_tree_cpu_seconds.last_split)
-                gc0 = _jvm_gc_seconds(spark)
-                steal0 = _steal_seconds()
-                forks0 = _fork_count()
-                tlb0 = _tlb_shootdowns()
-                th0 = _jvm_thread_cpu() if args.thread_profile else {}
-                th0_sys = dict(getattr(_jvm_thread_cpu, "last_sys", {}))
-                m = run_round(spark, store, r, pidx, robots, cfg, offset, sfilter)
-                sec = time.time() - tr
-                cpu = _tree_cpu_seconds() - cpu0
-                split1 = _tree_cpu_seconds.last_split
-                gc1 = _jvm_gc_seconds(spark)
-                steal1 = _steal_seconds()
-                offset += m["n_selected"]
-                row = {
-                    "round": r,
-                    "fetched": m["n_selected"],
-                    "sec": round(sec, 2),
-                    "cpu_core_sec": round(cpu, 1),
-                    "parallel_util": round(cpu / (sec * cpus), 3),
-                    "cpu_java": round(split1["java"] - split0["java"], 1),
-                    "cpu_python": round(split1["python"] - split0["python"], 1),
-                    "gc_sec": round(gc1 - gc0, 2),
-                    "steal_sec": round(steal1 - steal0, 2),
-                    "forks": _fork_count() - forks0,
-                    "tlb_shootdowns": _tlb_shootdowns() - tlb0,
+        for r in range(args.rounds):
+            sfilter = factory(spark, store, r) if factory else None
+            tr = time.time()
+            cpu0 = _tree_cpu_seconds()
+            split0 = dict(_tree_cpu_seconds.last_split)
+            gc0 = _jvm_gc_seconds(spark)
+            steal0 = _steal_seconds()
+            forks0 = _fork_count()
+            tlb0 = _tlb_shootdowns()
+            th0 = _jvm_thread_cpu() if args.thread_profile else {}
+            th0_sys = dict(getattr(_jvm_thread_cpu, "last_sys", {}))
+            m = run_round(spark, store, r, pidx, robots, cfg, offset, sfilter)
+            sec = time.time() - tr
+            cpu = _tree_cpu_seconds() - cpu0
+            split1 = _tree_cpu_seconds.last_split
+            gc1 = _jvm_gc_seconds(spark)
+            steal1 = _steal_seconds()
+            offset += m["n_selected"]
+            row = {
+                "round": r,
+                "fetched": m["n_selected"],
+                "sec": round(sec, 2),
+                "cpu_core_sec": round(cpu, 1),
+                "parallel_util": round(cpu / (sec * cpus), 3),
+                "cpu_java": round(split1["java"] - split0["java"], 1),
+                "cpu_python": round(split1["python"] - split0["python"], 1),
+                "gc_sec": round(gc1 - gc0, 2),
+                "steal_sec": round(steal1 - steal0, 2),
+                "forks": _fork_count() - forks0,
+                "tlb_shootdowns": _tlb_shootdowns() - tlb0,
+            }
+            if args.thread_profile:
+                th1 = _jvm_thread_cpu()
+                th1_sys = dict(getattr(_jvm_thread_cpu, "last_sys", {}))
+                delta = {
+                    k: round(v - th0.get(k, 0.0), 1)
+                    for k, v in th1.items()
+                    if v - th0.get(k, 0.0) >= 1.0
                 }
-                if args.thread_profile:
-                    th1 = _jvm_thread_cpu()
-                    th1_sys = dict(getattr(_jvm_thread_cpu, "last_sys", {}))
-                    delta = {
-                        k: round(v - th0.get(k, 0.0), 1)
-                        for k, v in th1.items()
-                        if v - th0.get(k, 0.0) >= 1.0
-                    }
-                    row["jvm_threads"] = dict(
-                        sorted(delta.items(), key=lambda kv: -kv[1])[:12]
-                    )
-                    delta_sys = {
-                        k: round(v - th0_sys.get(k, 0.0), 1)
-                        for k, v in th1_sys.items()
-                        if v - th0_sys.get(k, 0.0) >= 1.0
-                    }
-                    row["jvm_threads_sys"] = dict(
-                        sorted(delta_sys.items(), key=lambda kv: -kv[1])[:8]
-                    )
-                rounds.append(row)
-                print(
-                    f"[{cpus} cores] round {r}: {m['n_selected']} urls, "
-                    f"{sec:.1f}s, util {rounds[-1]['parallel_util']}",
-                    file=sys.stderr,
-                    flush=True,
+                row["jvm_threads"] = dict(
+                    sorted(delta.items(), key=lambda kv: -kv[1])[:12]
                 )
+                delta_sys = {
+                    k: round(v - th0_sys.get(k, 0.0), 1)
+                    for k, v in th1_sys.items()
+                    if v - th0_sys.get(k, 0.0) >= 1.0
+                }
+                row["jvm_threads_sys"] = dict(
+                    sorted(delta_sys.items(), key=lambda kv: -kv[1])[:8]
+                )
+            rounds.append(row)
+            print(
+                f"[{cpus} cores] round {r}: {m['n_selected']} urls, "
+                f"{sec:.1f}s, util {rounds[-1]['parallel_util']}",
+                file=sys.stderr,
+                flush=True,
+            )
         # split real fetches from dangling-link 404s (404s cost no
         # extraction; reporting them as throughput would flatter the numbers)
         lin = store.read(spark, "lineage")

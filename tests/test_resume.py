@@ -10,7 +10,14 @@ import os
 
 import pytest
 
-from engine.crawl import EngineConfig, fetch_log, run_crawl
+from engine.crawl import (
+    EngineConfig,
+    bootstrap,
+    fetch_log,
+    pages_index,
+    run_crawl,
+    run_round,
+)
 from engine.io import load_corpus
 from engine.snapstore import SnapStore
 from fixtures.gen import gen_corpus, write_parquet
@@ -311,19 +318,21 @@ def test_kill_during_bloom_delta_commit_resume_identical(
 class FailingCommit(SnapStore):
     """Raises from every commit after the bootstrap — a round that dies
     after its caches are filled but before anything is written.  Records
-    the session's shuffle partition count the failing commit plans under."""
+    the session's shuffle partition count and AQE setting the failing
+    commit plans under."""
 
     def commit_state(self, sid, tables, metrics=None, **kwargs):
         if sid > 0:
             conf = next(iter(tables.values())).sparkSession.conf
             self.round_partitions = conf.get("spark.sql.shuffle.partitions")
+            self.round_aqe = conf.get("spark.sql.adaptive.enabled")
             raise RuntimeError("simulated commit failure")
         return super().commit_state(sid, tables, metrics, **kwargs)
 
 
 def test_failed_round_releases_its_caches(spark, xs, tmp_path_factory):
     """run_round persists three frames per round (robots-tagged
-    candidates, extraction output, the range-partitioned fetch_seq slice)
+    candidates, extraction output, the range-partitioned lineage rows)
     and overrides the session's shuffle partitions for the round.  An
     exception mid-round must unpersist the frames and restore the
     partition count just like a clean round — a long-lived session would
@@ -349,3 +358,41 @@ def test_failed_round_releases_its_caches(spark, xs, tmp_path_factory):
         spark.conf.set(key, prev)
     assert store.latest() == 0
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_bare_run_round_plans_statically_and_restores(
+    spark, xs, tmp_path_factory
+):
+    """run_round owns its planning: called with nothing around it and AQE
+    explicitly on, it commits with AQE off at the round's partition count
+    (one wave of 8 on the 8-core fixture), and after a clean round and a
+    raising one alike the session reads AQE on and its prior 24
+    partitions again."""
+    corpus, corpus_dir = xs
+    tables = load_corpus(spark, corpus_dir)
+    aqe, shuffle = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    prev_aqe, prev_shuffle = spark.conf.get(aqe, None), spark.conf.get(shuffle)
+    spark.conf.set(aqe, "true")
+    spark.conf.set(shuffle, "24")
+    pidx = pages_index(tables["pages"]).persist()
+    try:
+        args = (pidx, tables["robots"], _cfg(corpus), 0)
+        ok = SnapStore(str(tmp_path_factory.mktemp("bare_ok")))
+        bootstrap(spark, ok, tables["seeds"])
+        run_round(spark, ok, 0, *args)
+        assert ok.latest() == 1
+        assert (spark.conf.get(aqe), spark.conf.get(shuffle)) == ("true", "24")
+
+        failing = FailingCommit(str(tmp_path_factory.mktemp("bare_fail")))
+        bootstrap(spark, failing, tables["seeds"])
+        with pytest.raises(RuntimeError, match="simulated commit failure"):
+            run_round(spark, failing, 0, *args)
+        assert (failing.round_aqe, failing.round_partitions) == ("false", "8")
+        assert (spark.conf.get(aqe), spark.conf.get(shuffle)) == ("true", "24")
+    finally:
+        pidx.unpersist()
+        spark.conf.set(shuffle, prev_shuffle)
+        if prev_aqe is None:
+            spark.conf.unset(aqe)
+        else:
+            spark.conf.set(aqe, prev_aqe)
