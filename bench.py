@@ -10,10 +10,11 @@ Two parts, both timed end-to-end (plan build → materialization):
 2. **Crawl throughput** — the north-rule metric (BASELINE.json:2 "URLs
    fetched+deduped/sec"): a synthetic Common-Crawl-style frontier scaled
    to the bench SF (fixtures/gen.py corpus, cached as parquet in /tmp),
-   bootstrapped with a BIG frontier (every page url, canon-hostile raw
-   forms) and a pre-populated seen set (25% of urls) so every round does
-   real anti-join/dedup/politeness/fetch/extract work, then
-   ``engine.crawl.run_round`` for 3 rounds.
+   bootstrapped (``engine.crawl.bootstrap``) with a BIG frontier (every
+   page url, canon-hostile raw forms) and a pre-populated seen set (25% of
+   urls; both built by ``scripts/bench_scaling.bench_inputs``) so every
+   round does real anti-join/dedup/politeness/fetch/extract work, then
+   resumed with ``engine.crawl.run_crawl`` for 3 rounds.
 
 The crawl phase is measured as the MEDIAN of ``$SPARK_GRAFT_CRAWL_SAMPLES``
 (default 5) runs, each in its own FRESH JVM subprocess (``--crawl-only``
@@ -35,9 +36,9 @@ Output: {"metric": "headline_suite_sec", "value": <total sec>,
                    "urls_per_sec":…, "median_sec":…, "samples":[…]},
          "cpus": N}
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-``scripts/bench_scaling.py``, which shells out to this file at two
-parallelism levels (results in BENCH/BASELINE.md).
+Scaling-efficiency evidence is produced separately by
+``scripts/bench_scaling.py`` (resident taskset-pinned workers at two
+parallelism levels; results in BENCH/TABLES.md and BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -50,7 +51,9 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(REPO, "scripts"))  # bench_scaling
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -131,64 +134,32 @@ def _bench_corpus_dir(sf: float) -> tuple[str, int, int]:
 
 def bench_crawl(spark, sf: float) -> dict:
     """North-rule throughput: URLs fetched+deduped/sec over ROUNDS rounds."""
-    from pyspark.sql import Observation, functions as F
+    from bench_scaling import bench_inputs
 
-    from engine.crawl import EngineConfig, pages_index, run_round
-    from engine.frontier import frontier_from_seeds
+    from engine.crawl import EngineConfig, bootstrap, run_crawl
     from engine.io import load_corpus
     from engine.snapstore import SnapStore
-    from engine.udfs import hash64_udf
 
     corpus_dir, n_hosts, mean_pages = _bench_corpus_dir(sf)
     t = load_corpus(spark, corpus_dir)
     pages, robots = t["pages"], t["robots"]
 
-    # Big frontier: every page url in a canon-hostile raw form (uppercase
-    # host — exercises the canonicalization UDF across the whole frontier),
-    # priority = pmod(hash, 100).  Seen pre-populated with ~25% of urls so
-    # the anti-join prunes real volume.
-    urls = pages.select("url").distinct()
-    seeds = urls.select(
-        F.concat(
-            F.lit("HTTP://"),
-            F.upper(F.regexp_extract("url", r"http://([^/]+)/", 1)),
-            F.regexp_extract("url", r"http://[^/]+(/.*)", 1),
-        ).alias("url"),
-        F.pmod(F.xxhash64("url"), F.lit(100)).cast("int").alias("priority"),
-    )
+    # Big frontier: every page url in a canon-hostile raw form, seen
+    # pre-populated with ~25% of urls so the anti-join prunes real volume
+    seeds, seen0 = bench_inputs(pages, CPUS)
     store = SnapStore(tempfile.mkdtemp(prefix="bench_crawl_"))
-    pidx = pages_index(pages.select("url", "warc_ts", "html")).persist()
-
-    t0 = time.time()
-    seen0 = (
-        urls.repartition(CPUS, "url")
-        .withColumn("url_hash", hash64_udf("url"))
-        .filter(F.pmod(F.col("url_hash"), F.lit(4)) == 0)
-        .select("url_hash", "url", F.lit(-1).alias("fetched_round"))
-    )
-    n_seen0 = seen0.persist().count()
-    # the frontier row count rides the bootstrap write (as in
-    # engine.crawl.bootstrap): run_round sizes its shuffles from it
-    fobs = Observation()
-    frontier0 = frontier_from_seeds(seeds).observe(
-        fobs, F.count(F.lit(1)).alias("frontier_rows")
-    )
-    store.commit_state(
-        0,
-        {"frontier": frontier0, "seen": seen0},
-        {"round": -1, "n_seen_end": int(n_seen0)},
-        metrics_fn=lambda: {"frontier_rows": int(fobs.get["frontier_rows"])},
-    )
-
     budget = max(8, (mean_pages * 3) // (4 * ROUNDS))
     cfg = EngineConfig(default_budget=budget, max_rounds=ROUNDS, salt=8)
-    fetched = 0
-    for r in range(ROUNDS):
-        m = run_round(spark, store, r, pidx, robots, cfg, fetched)
-        fetched += m["n_selected"]
-    sec = time.time() - t0
 
-    frontier_n = urls.count()
+    t0 = time.time()
+    bootstrap(spark, store, seeds, seen0)
+    run_crawl(
+        spark, store, pages.select("url", "warc_ts", "html"), robots, None, cfg
+    )
+    sec = time.time() - t0
+    fetched = store.manifest(store.latest())["metrics"]["fetch_seq_end"]
+
+    frontier_n = seeds.count()
     out = {
         "fetched_urls": int(fetched),
         "frontier_urls": int(frontier_n),

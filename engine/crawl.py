@@ -225,23 +225,36 @@ def pages_index(pages: DataFrame) -> DataFrame:
 
 
 def bootstrap(
-    spark: SparkSession, store: SnapStore, seeds: DataFrame
+    spark: SparkSession,
+    store: SnapStore,
+    seeds: DataFrame,
+    seen: DataFrame | None = None,
 ) -> None:
-    """Commit snapshot 0: seeded frontier + empty seen.  The frontier row
-    count rides the write as an observed metric so the crawl loop never
-    needs a separate count job to decide whether to run a round."""
-    frontier0 = frontier_from_seeds(seeds)
-    fobs = Observation()
-    frontier0 = frontier0.observe(
+    """Commit snapshot 0: the frontier seeded from ``seeds`` and the seen
+    set ``seen`` (``SEEN_SCHEMA`` rows; empty by default — a crawl that
+    starts with urls it must never fetch passes them here).
+
+    This is the one place a crawl's starting state is written: every
+    snapshot-0 manifest carries ``round`` -1, ``fetch_seq_end`` 0 (the
+    head of the fetch_seq offset chain each round extends) and the two
+    row counts a round reads before it plans, ``n_seen_end`` and
+    ``frontier_rows``.  Both counts ride the table writes as observed
+    metrics, so neither costs a separate count job.  Resume with
+    ``run_crawl(..., seeds=None, ...)``."""
+    fobs, sobs = Observation(), Observation()
+    frontier0 = frontier_from_seeds(seeds).observe(
         fobs, F.count(F.lit(1)).alias("frontier_rows")
     )
-    seen0 = spark.createDataFrame([], SEEN_SCHEMA)
+    if seen is None:
+        seen = spark.createDataFrame([], SEEN_SCHEMA)
+    seen0 = seen.observe(sobs, F.count(F.lit(1)).alias("n_seen_end"))
     store.commit_state(
         0,
         {"frontier": frontier0, "seen": seen0},
-        {"round": -1, "fetch_seq_end": 0, "n_seen_end": 0},
+        {"round": -1, "fetch_seq_end": 0},
         metrics_fn=lambda: {
-            "frontier_rows": int(fobs.get["frontier_rows"] or 0)
+            "n_seen_end": int(sobs.get["n_seen_end"] or 0),
+            "frontier_rows": int(fobs.get["frontier_rows"] or 0),
         },
     )
 
@@ -555,11 +568,13 @@ def run_crawl(
 ) -> int:
     """Run (or resume — SURVEY.md §3.4) the crawl to completion.
 
-    If the store has no committed snapshot, seeds bootstrap snapshot 0;
-    otherwise the loop re-enters after the latest committed snapshot —
-    a kill between data write and manifest write of round r simply re-runs
-    round r (orphan dirs are overwritten; lineage never double-counts
-    because visibility is manifest-gated).  Returns rounds executed.
+    If the store has no committed snapshot, seeds bootstrap snapshot 0
+    (a crawl with a pre-seen set calls ``bootstrap`` itself and passes
+    ``seeds=None``); otherwise the loop re-enters after the latest
+    committed snapshot — a kill between data write and manifest write of
+    round r simply re-runs round r (orphan dirs are overwritten; lineage
+    never double-counts because visibility is manifest-gated).  Returns
+    rounds executed.
     """
     if store.latest() is None:
         if seeds is None:

@@ -65,7 +65,7 @@ def _doc_pages(docs_rows):
 
 
 def flagship(spark, sf_dir: str = "/root/testdata/sf0.001"):
-    from engine.crawl import EngineConfig, bootstrap, pages_index, run_round
+    from engine.crawl import EngineConfig, run_crawl
     from engine.snapstore import SnapStore
 
     docs = (
@@ -82,7 +82,6 @@ def flagship(spark, sf_dir: str = "/root/testdata/sf0.001"):
         robots_rows, "host string, disallow array<string>, crawl_delay_ms int"
     )
     store = SnapStore(tempfile.mkdtemp(prefix="flagship_"))
-    bootstrap(spark, store, seeds)
     cfg = EngineConfig(default_budget=2, max_rounds=1, salt=4)
-    run_round(spark, store, 0, pages_index(pages), robots, cfg, 0)
+    run_crawl(spark, store, pages, robots, seeds, cfg)
     return store.read(spark, "lineage", 1)

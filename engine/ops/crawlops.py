@@ -186,17 +186,14 @@ def time_travel_read(spark, sf):
     return store.read(spark, "frontier", 0)  # AS OF snapshot 0: 10 rows
 
 
-@op("crawl_round", None, "A")
-def crawl_round(spark, sf):
-    """One full crawl round on the XS corpus — the flagship pipeline
-    (anti-join → robots gate → politeness window → fetch join → Arrow
-    extraction → lineage).  entry() runs this too."""
-    from engine.crawl import EngineConfig, run_round, bootstrap, pages_index
+def _xs_crawl(spark, max_rounds: int):
+    """The flagship crawl on the XS corpus from its seeds, at most
+    ``max_rounds`` rounds, into a fresh store; returns the store."""
+    from engine.crawl import EngineConfig, run_crawl
     from engine.snapstore import SnapStore
     from fixtures.gen import gen_corpus
 
     c = gen_corpus("XS")
-    pages = _xs_pages(spark)
     robots = spark.createDataFrame(
         [
             (h, d, c.crawl_delay_ms.get(h, 0))
@@ -205,16 +202,24 @@ def crawl_round(spark, sf):
         "host string, disallow array<string>, crawl_delay_ms int",
     )
     seeds = spark.createDataFrame(c.seeds, "url string, priority int")
-    store = SnapStore(tempfile.mkdtemp(prefix="crawlround_"))
-    bootstrap(spark, store, seeds)
+    store = SnapStore(tempfile.mkdtemp(prefix="xscrawl_"))
     cfg = EngineConfig(
         default_budget=c.default_budget,
         budget_overrides=c.budget_overrides,
-        max_rounds=1,
+        max_rounds=max_rounds,
         salt=4,
     )
-    run_round(spark, store, 0, pages_index(pages), robots, cfg, 0)
-    return store.read(spark, "lineage", 1)
+    run_crawl(spark, store, _xs_pages(spark), robots, seeds, cfg)
+    return store
+
+
+@op("crawl_round", None, "A")
+def crawl_round(spark, sf):
+    """One full crawl round on the XS corpus — the flagship pipeline
+    (anti-join → robots gate → politeness window → fetch join → Arrow
+    extraction → lineage).  entry() runs the same one-round crawl on a
+    corpus built from sf0.001 documents (engine/entryquery.py)."""
+    return _xs_crawl(spark, 1).read(spark, "lineage", 1)
 
 
 @op("crawl_lineage_agg", _golden("crawl_lineage_agg"), "A")
@@ -226,29 +231,7 @@ def crawl_lineage_agg(spark, sf):
     hash match re-proves engine≡refspec on the official record — crawl
     ordering, robots gating, politeness budgets, link extraction, and
     per-url text byte counts all fold into these aggregates."""
-    from engine.crawl import EngineConfig, run_crawl
-    from engine.snapstore import SnapStore
-    from fixtures.gen import gen_corpus
-
-    c = gen_corpus("XS")
-    pages = _xs_pages(spark)
-    robots = spark.createDataFrame(
-        [
-            (h, d, c.crawl_delay_ms.get(h, 0))
-            for h, d in sorted(c.robots.items())
-        ],
-        "host string, disallow array<string>, crawl_delay_ms int",
-    )
-    seeds = spark.createDataFrame(c.seeds, "url string, priority int")
-    store = SnapStore(tempfile.mkdtemp(prefix="crawlagg_"))
-    cfg = EngineConfig(
-        default_budget=c.default_budget,
-        budget_overrides=c.budget_overrides,
-        max_rounds=100,
-        salt=4,
-    )
-    run_crawl(spark, store, pages, robots, seeds, cfg)
-    lin = store.read(spark, "lineage")
+    lin = _xs_crawl(spark, 100).read(spark, "lineage")
     return lin.groupBy("round").agg(
         F.count("*").alias("n_fetched"),
         F.sum((F.col("status") == "200").cast("long")).alias("n_ok"),
@@ -265,34 +248,12 @@ def crawl_fetch_log(spark, sf):
     (round, fetch_seq, url, status, host) row of the lineage, pinned
     row-for-row from refspec.run_crawl (refspec/crawler.py:147 assigns
     fetch_seq as a dense counter over selected urls in (round, url)
-    order; engine/crawl.py:242 computes the identical rank with a
-    range-partitioned two-level sequence, no single-partition window).
-    A driver hash match on this op oracles the north rule's "matching
-    crawl ordering" claim itself — the exact fetch order, not just its
-    per-round aggregate (crawl_lineage_agg)."""
-    from engine.crawl import EngineConfig, run_crawl
-    from engine.snapstore import SnapStore
-    from fixtures.gen import gen_corpus
-
-    c = gen_corpus("XS")
-    pages = _xs_pages(spark)
-    robots = spark.createDataFrame(
-        [
-            (h, d, c.crawl_delay_ms.get(h, 0))
-            for h, d in sorted(c.robots.items())
-        ],
-        "host string, disallow array<string>, crawl_delay_ms int",
-    )
-    seeds = spark.createDataFrame(c.seeds, "url string, priority int")
-    store = SnapStore(tempfile.mkdtemp(prefix="crawlseq_"))
-    cfg = EngineConfig(
-        default_budget=c.default_budget,
-        budget_overrides=c.budget_overrides,
-        max_rounds=100,
-        salt=4,
-    )
-    run_crawl(spark, store, pages, robots, seeds, cfg)
-    return store.read(spark, "lineage").select(
+    order; engine/crawl.py's _global_seq_by_url computes the identical
+    rank with a range-partitioned two-level sequence, no single-partition
+    window).  A driver hash match on this op oracles the north rule's
+    "matching crawl ordering" claim itself — the exact fetch order, not
+    just its per-round aggregate (crawl_lineage_agg)."""
+    return _xs_crawl(spark, 100).read(spark, "lineage").select(
         F.col("round").cast("int").alias("round"),
         F.col("fetch_seq").cast("long").alias("fetch_seq"),
         "url",

@@ -385,6 +385,38 @@ def ensure_corpus(path: str, n_hosts: int, mean_pages: int, body_words: int) -> 
     print(f"corpus ready in {time.time()-t0:.0f}s", file=sys.stderr, flush=True)
 
 
+def bench_inputs(pages, n_par: int, preseen_mod: int = 4, preseen_keep: int = 1):
+    """(seeds, pre-seen set) for a whole-corpus bench crawl over ``pages``.
+
+    Seeds: every distinct page url in a canon-hostile raw form (scheme
+    and host uppercased, so the canon UDF sees every url), priority =
+    pmod(xxhash64(url), 100).  Pre-seen: ``SEEN_SCHEMA`` rows for the
+    urls with pmod(url_hash, preseen_mod) < preseen_keep (default 1/4),
+    so the first round's anti-join prunes real volume; the url_hash UDF
+    runs over ``n_par`` url-partitions.  Both frames are lazy and
+    deterministic: pass them to ``engine.crawl.bootstrap``."""
+    from pyspark.sql import functions as F
+
+    from engine.udfs import hash64_udf
+
+    urls = pages.select("url").distinct()
+    seeds = urls.select(
+        F.concat(
+            F.lit("HTTP://"),
+            F.upper(F.regexp_extract("url", r"http://([^/]+)/", 1)),
+            F.regexp_extract("url", r"http://[^/]+(/.*)", 1),
+        ).alias("url"),
+        F.pmod(F.xxhash64("url"), F.lit(100)).cast("int").alias("priority"),
+    )
+    seen = (
+        urls.repartition(n_par, "url")
+        .withColumn("url_hash", hash64_udf("url"))
+        .filter(F.pmod(F.col("url_hash"), F.lit(preseen_mod)) < preseen_keep)
+        .select("url_hash", "url", F.lit(-1).alias("fetched_round"))
+    )
+    return seeds, seen
+
+
 def _corpus_params(args) -> dict:
     """Actual generation parameters of the corpus a run used.
 
@@ -435,8 +467,7 @@ def run_worker(args) -> dict:
     """One parallelism level: bootstrap (unmeasured warm-up) + measured rounds."""
     from pyspark.sql import functions as F
 
-    from engine.crawl import EngineConfig, pages_index, run_round
-    from engine.frontier import frontier_from_seeds
+    from engine.crawl import EngineConfig, bootstrap, pages_index, run_round
     from engine.io import load_corpus
     from engine.session import get_spark
     from engine.snapstore import SnapStore
@@ -564,39 +595,15 @@ def run_worker(args) -> dict:
         extract_both_z_udf("html_z", "url"),
     ).write.format("noop").mode("overwrite").save()
 
-    # bootstrap inputs: whole-corpus frontier in canon-hostile raw form (the
-    # canon UDF sees every url), 25% of urls pre-seen (the anti-join prunes
-    # real volume).  Deterministic and sample-invariant, so they are
-    # computed + persisted once; in --serve mode every sample recommits the
-    # same frames against a fresh store (bootstrap_sec, unmeasured).
-    urls = pages.select("url").distinct()
-    seeds = urls.select(
-        F.concat(
-            F.lit("HTTP://"),
-            F.upper(F.regexp_extract("url", r"http://([^/]+)/", 1)),
-            F.regexp_extract("url", r"http://[^/]+(/.*)", 1),
-        ).alias("url"),
-        F.pmod(F.xxhash64("url"), F.lit(100)).cast("int").alias("priority"),
-    )
     # --preseen-mod K --preseen-keep J pre-seeds J/K of the corpus
-    # (pmod(url_hash, K) < J).  Default 1/4 == the historical
-    # pmod(h,4)==0 bootstrap every prior sample used; the seen>>frontier
-    # stress (VERDICT r4 task #4) passes 9/10 so the exact anti-join's
-    # build side is ~9x the per-round frontier — the regime the
-    # store-backed bloom's engage gate is designed for.
-    seen0 = (
-        urls.repartition(cpus, "url")
-        .withColumn("url_hash", hash64_udf("url"))
-        .filter(
-            F.pmod(F.col("url_hash"), F.lit(args.preseen_mod))
-            < args.preseen_keep
-        )
-        .select("url_hash", "url", F.lit(-1).alias("fetched_round"))
+    # (default 1/4); the seen>>frontier stress passes 9/10 so the exact
+    # anti-join's build side is ~9x the per-round frontier — the regime the
+    # store-backed bloom's engage gate is designed for.  Every sample
+    # bootstraps a fresh store from these lazy frames (bootstrap_sec,
+    # unmeasured).
+    seeds, seen0 = bench_inputs(
+        pages, cpus, args.preseen_mod, args.preseen_keep
     )
-    frontier0 = frontier_from_seeds(seeds).persist()
-    seen0 = seen0.persist()
-    n_frontier0 = frontier0.count()
-    n_seen0 = seen0.count()
     warm_sec = time.time() - t0
 
     cfg = EngineConfig(
@@ -620,23 +627,17 @@ def run_worker(args) -> dict:
 
         factory = adaptive_seen_filter_factory()
 
-    from pyspark.sql import functions as FF
-
     def one_sample() -> dict:
-        # fresh store per sample; bootstrap commit of the persisted
-        # frontier/seen frames is unmeasured (bootstrap_sec)
+        # fresh store per sample; its bootstrap (canon + hash over the
+        # whole corpus, snapshot-0 commit) is unmeasured (bootstrap_sec)
         tb = time.time()
         store = SnapStore(tempfile.mkdtemp(prefix=f"scale{cpus}_"))
-        store.commit_state(
-            0,
-            {"frontier": frontier0, "seen": seen0},
-            {"n_seen_end": int(n_seen0), "frontier_rows": int(n_frontier0)},
-        )
+        bootstrap(spark, store, seeds, seen0)
         boot_sec = time.time() - tb
         rounds = []
-        offset = 0
         for r in range(args.rounds):
             sfilter = factory(spark, store, r) if factory else None
+            offset = store.manifest(r)["metrics"]["fetch_seq_end"]
             tr = time.time()
             cpu0 = _tree_cpu_seconds()
             split0 = dict(_tree_cpu_seconds.last_split)
@@ -652,7 +653,6 @@ def run_worker(args) -> dict:
             split1 = _tree_cpu_seconds.last_split
             gc1 = _jvm_gc_seconds(spark)
             steal1 = _steal_seconds()
-            offset += m["n_selected"]
             row = {
                 "round": r,
                 "fetched": m["n_selected"],
@@ -698,7 +698,7 @@ def run_worker(args) -> dict:
         status = {
             r["status"]: r["n"]
             for r in lin.groupBy("status")
-            .agg(FF.count("*").alias("n"))
+            .agg(F.count("*").alias("n"))
             .collect()
         }
         # manifest growth check (the O(1)-driver-side claim): per-snapshot
@@ -707,6 +707,9 @@ def run_worker(args) -> dict:
             f: os.path.getsize(os.path.join(store.manifest_dir, f))
             for f in sorted(os.listdir(store.manifest_dir))
         }
+        fetched_total = store.manifest(store.latest())["metrics"][
+            "fetch_seq_end"
+        ]
         shutil.rmtree(store.root, ignore_errors=True)
         return {
             "cpus": cpus,
@@ -715,7 +718,7 @@ def run_worker(args) -> dict:
             "warm_sec": round(warm_sec, 2),
             "bootstrap_sec": round(boot_sec, 2),
             "rounds": rounds,
-            "fetched_total": int(offset),
+            "fetched_total": int(fetched_total),
             "fetched_200": int(status.get("200", 0)),
             "fetched_404": int(status.get("404", 0)),
             "round_sec_total": round(sum(r["sec"] for r in rounds), 2),
@@ -1028,14 +1031,14 @@ def orchestrate(args) -> int:
 
     eff = statistics.median(pair_effs)
     med_eff = statistics.median(pair_med_round_effs)
-    # representative sample per level (median by round_sec_total) keeps the
-    # single-sample artifact shape for the results table
-    results = {
-        c: sorted(runs[c], key=lambda r: r["round_sec_total"])[
-            len(runs[c]) // 2
-        ]
-        for c in levels
-    }
+    # representative sample per level: the one nearest the interpolated
+    # median of round_sec_total (an even --samples has no middle sample);
+    # keeps the single-sample artifact shape for the results table
+    def _rep(rs: list[dict]) -> dict:
+        med = statistics.median(r["round_sec_total"] for r in rs)
+        return min(rs, key=lambda r: abs(r["round_sec_total"] - med))
+
+    results = {c: _rep(runs[c]) for c in levels}
     thr = {c: _thr(results[c]) for c in levels}
     # per-pair engine-vs-substrate: engine median-round eff of pair s
     # normalized by the parse-kernel eff measured in the same window

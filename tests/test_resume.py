@@ -18,7 +18,9 @@ from engine.crawl import (
     run_crawl,
     run_round,
 )
+from engine.frontier import SEEN_SCHEMA
 from engine.io import load_corpus
+from engine.pure import canon, hash64
 from engine.snapstore import SnapStore
 from fixtures.gen import gen_corpus, write_parquet
 
@@ -396,3 +398,51 @@ def test_bare_run_round_plans_statically_and_restores(
             spark.conf.unset(aqe)
         else:
             spark.conf.set(aqe, prev_aqe)
+
+
+def test_preseen_bootstrap_is_never_fetched(
+    spark, corpus, corpus_dir, tmp_path_factory
+):
+    """bootstrap takes the crawl's pre-seen set P: snapshot 0's manifest
+    carries the same four keys as a seeds-only bootstrap, with n_seen_end
+    = |P| observed on the seen write.  A crawl resumed from it
+    (seeds=None) never fetches a url of P — two seeds and four pages the
+    seeds-only crawl fetches in rounds 0-2 — and each later manifest
+    chains n_seen_end and fetch_seq_end to the seen and lineage row
+    counts of its snapshot."""
+    tables = load_corpus(spark, corpus_dir)
+    page_urls = {p["url"] for p in corpus.pages}
+    picked = [
+        f"http://{h}.example.test/p/{i}"
+        for h, i in (("h2", 2), ("h4", 1), ("h5", 2), ("h6", 2))
+    ]
+    assert set(picked) <= page_urls
+    pre = sorted({canon(u) for u, _ in corpus.seeds[:2]} | set(picked))
+    seen0 = spark.createDataFrame(
+        [(hash64(u), u, -1) for u in pre], SEEN_SCHEMA
+    )
+    store = SnapStore(str(tmp_path_factory.mktemp("preseen")))
+    bootstrap(spark, store, tables["seeds"], seen0)
+    n_frontier = len({canon(u) for u, _ in corpus.seeds})
+    assert store.manifest(0)["metrics"] == {
+        "round": -1,
+        "fetch_seq_end": 0,
+        "n_seen_end": len(pre),
+        "frontier_rows": n_frontier,
+    }
+
+    cfg = EngineConfig(
+        default_budget=corpus.default_budget,
+        budget_overrides=corpus.budget_overrides,
+        max_rounds=3,
+        salt=4,
+    )
+    assert run_crawl(
+        spark, store, tables["pages"], tables["robots"], None, cfg
+    ) == 3
+    fetched = {r["url"] for r in store.read(spark, "lineage").collect()}
+    assert fetched and not fetched & set(pre)
+    for sid in range(1, 4):
+        m = store.manifest(sid)["metrics"]
+        assert m["n_seen_end"] == store.read(spark, "seen", sid).count()
+        assert m["fetch_seq_end"] == store.read(spark, "lineage", sid).count()
